@@ -1,0 +1,1 @@
+"""Layered benchmark of the engine: see README.md in this directory."""
