@@ -38,15 +38,8 @@ from flink_anomaly_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def main() -> None:
-    spark = get_spark("bench")
-    # batch queries only: the streaming_* entries run a full streaming
-    # job inside the builder (availableNow → memory sink) and the
-    # stateful running-concat emits O(n²) prefix chars by definition —
-    # they are correctness-checked by the driver's rows-only gate, not
-    # raced here.
-    queries = {n: fn for n, fn in all_queries().items() if not n.startswith("streaming_")}
-
+def time_queries(spark, sf_dir: str, queries: dict) -> dict[str, float]:
+    """Best-of-2 wall seconds per query, each after one warm run."""
     # one warm run per query (JVM warm-up, parquet footer cache, Catalyst
     # codegen compile, Python worker pool) — the timed second run measures
     # steady-state execution, which is what scales with data volume
@@ -54,7 +47,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name, fn in queries.items():
-        fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         release_cached()  # warm run's persisted intermediates
         # best of 2 timed runs: a many-query loop accumulates enough JVM
         # state (codegen classes, GC) that a single run occasionally eats
@@ -63,14 +56,18 @@ def main() -> None:
         best = float("inf")
         for _ in range(2):
             t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             best = min(best, time.perf_counter() - t0)
             # executor memory is a shared resource across the loop: drop
             # each run's cached intermediates before the next starts
             release_cached()
         timings[name] = round(best, 3)
+    return timings
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+
+def report(timings: dict[str, float], sf_dir: str) -> None:
+    """Write the detail file and print the full record, then the headline."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "total wall-clock sec over all registered queries",
         "value": round(sum(timings.values()), 3),
@@ -109,6 +106,17 @@ def main() -> None:
         "detail_file": detail_path,
     }
     print(json.dumps(headline))
+
+
+def main() -> None:
+    spark = get_spark("bench")
+    # batch queries only: the streaming_* entries run a full streaming
+    # job inside the builder (availableNow → memory sink) and the
+    # stateful running-concat emits O(n²) prefix chars by definition —
+    # they are correctness-checked by the driver's rows-only gate, not
+    # raced here.
+    queries = {n: fn for n, fn in all_queries().items() if not n.startswith("streaming_")}
+    report(time_queries(spark, SF_DIR, queries), SF_DIR)
 
 
 if __name__ == "__main__":

@@ -30,16 +30,20 @@ def pagerank(
     isolated ones. Dangling mass (rank held by nodes with no out-edges)
     is redistributed uniformly each step, so total rank is conserved.
 
+    The out-degree column is joined onto the node frame ONCE, before
+    the loop, and each iteration's checkpoint carries it with the
+    ranks. That one join carries NO broadcast hint (round-11, VERDICT
+    r10 #3): the out-degree table is corpus-proportional on a near-dup
+    graph, so AQE broadcasts it only while it fits under
+    autoBroadcastJoinThreshold — a forced hint would OOM at 10⁸⁺ nodes.
+
     Per iteration: one (src)-keyed join of ranks onto the edge list and
     one (dst)-keyed aggregation — the standard two-shuffle PageRank
-    step. The out-degree table is |source-nodes|-sized, i.e. corpus-
-    proportional on a near-dup graph, so it carries NO broadcast hint
-    (round-11, VERDICT r10 #3): AQE broadcasts it while it fits under
-    autoBroadcastJoinThreshold and falls back to a shuffled join past
-    that — a forced hint would OOM at 10⁸⁺ nodes. Only the genuinely
-    scalar 1-row dangling-mass aggregate keeps its broadcast (it feeds
-    a cross join; 1 row by construction). Returns (id, pr) with pr
-    rounded to 6 (sum-order ulp across engines is ~1e-15 per step).
+    step — then a join of the contributions back onto the nodes. Only
+    the genuinely scalar 1-row dangling-mass aggregate keeps its
+    broadcast (it feeds a cross join; 1 row by construction). Returns
+    (id, pr) with pr rounded to 6 (sum-order ulp across engines is
+    ~1e-15 per step).
     """
     from flink_anomaly_spark.operators.dedup import _truncate_fn
 

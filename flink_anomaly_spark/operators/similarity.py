@@ -11,6 +11,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -74,12 +76,14 @@ def inline_int_array(vals: list[int]) -> Column:
     Non-integer values are rejected loudly (mirroring _sql_double's
     non-finite guard): ``str(int(v))`` would silently truncate a float
     where the ``F.lit`` form this replaces preserved it (r12 ADVICE).
-    Empty input rejected for the sequence reason (see inline_vector)."""
+    Inf and NaN are checked before ``int(v)``, so both raise ValueError
+    rather than OverflowError for inf. Empty input rejected for the
+    sequence reason (see inline_vector)."""
     if not vals:
         raise ValueError("inline_int_array: empty literal list")
     parts = []
     for v in vals:
-        if v != int(v):
+        if not math.isfinite(v) or v != int(v):
             raise ValueError(f"inline_int_array: non-integer literal {v!r}")
         parts.append(str(int(v)))
     return F.expr("array(" + ",".join(parts) + ")")

@@ -521,31 +521,3 @@ def test_maha_empty_and_null_corpora(spark, duck):
         mahalanobis_dim_attribution_oracle_sql("embedding", "deg_emb", d=3)
     ).fetchall()
     assert rows == []
-
-
-def test_fingerprints_ignore_runtime_cache_state():
-    """Round-11 review follow-up: the fingerprint ledger must be a pure
-    function of SOURCE, not of what ran earlier in the process — the
-    dedup persist registry grows as queries execute, and hashing it
-    made test_changed_plans_hold_window_slots order-dependent (the
-    whole-suite flake this round). A fingerprint computed with a dirty
-    registry must equal the fresh-process value."""
-    from flink_anomaly_spark.operators import dedup
-    from flink_anomaly_spark.streaming import pipelines
-    from tools.plan_fingerprints import query_fingerprint
-
-    before = query_fingerprint("dedup_clusters")
-    dedup._PERSISTED.append(object())  # simulate an in-flight cache entry
-    try:
-        assert query_fingerprint("dedup_clusters") == before
-    finally:
-        dedup._PERSISTED.pop()
-    # the streaming twin of the same bug: the state-metrics capture
-    # global is populated by every streaming run
-    before = query_fingerprint("streaming_window_count")
-    saved = pipelines.LAST_STATE_METRICS
-    pipelines.LAST_STATE_METRICS = [{"operator": "x", "max_rows_total": 1}]
-    try:
-        assert query_fingerprint("streaming_window_count") == before
-    finally:
-        pipelines.LAST_STATE_METRICS = saved

@@ -15,12 +15,9 @@ Output: the same ``{"sf", "queries": {...}}`` detail shape as
 ``bench.py``, written to the non-committed ``BENCH_STREAMING_run.json``
 (or ``$SPARK_GRAFT_BENCH_STREAMING_DETAIL``; the committed
 ``BENCH_STREAMING.json`` is the judged BASELINE — re-baselining is an
-explicit act, the round-11 bench.py convention), so
-``tools/bench_gate.py`` gates streaming regressions exactly like
-batch ones:
+explicit act, the round-11 bench.py convention):
 
     python tools/bench_streaming.py                       # run at SF_DIR
-    python tools/bench_gate.py /tmp/fresh.json BENCH_STREAMING.json
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default all cores),
