@@ -64,10 +64,12 @@ def grouped_udaf(df: DataFrame, key: str, fn, output_schema: str) -> DataFrame:
     group) via applyInPandas — the PySpark place for custom aggregates
     that aren't algebraic compositions of built-ins.
 
-    ``fn(key_tuple, pdf) -> single-row pd.DataFrame``.
+    ``fn(key_tuple, pdf) -> single-row pd.DataFrame``. Every parameter
+    of the wrapper is annotated so pyspark infers the grouped-map eval
+    type from the hints instead of warning that it cannot.
     """
 
-    def wrapper(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def wrapper(key_tuple: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return fn(key_tuple, pdf)
 
     return df.groupBy(key).applyInPandas(wrapper, output_schema)

@@ -62,8 +62,8 @@ def release_cached() -> int:
     and the checkpoint-heavy queries degraded 15-60 % vs a fresh
     session. With the explicit collect the stored-RDD count stays at
     the per-query working set (5-10) and in-loop times match fresh-
-    session probes (measured r13, OPTIMIZATION_r13.md; collect cost is
-    ~10 ms, outside every timed region)."""
+    session probes (measured in commit a897cb8; collect cost is ~10 ms,
+    outside every timed region)."""
     import gc
 
     n = 0

@@ -56,25 +56,6 @@ def join_broadcast(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> D
     return fact.join(F.broadcast(dim), on, how)
 
 
-def join_shuffle(left: DataFrame, right: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Large-large equi-join: let Catalyst pick sort-merge vs shuffle-hash,
-    with AQE skew-splitting enabled (session.py). Both sides hash-shuffle
-    on the join key.
-    """
-    return left.join(right, on, how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """EXISTS — left rows with a match; right columns dropped, right side
-    deduplicated by the engine (cheaper than inner+distinct)."""
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """NOT EXISTS."""
-    return left.join(right, on, "left_anti")
-
-
 def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     """MERGE INTO emulation (no Delta/Iceberg in this build): updated
     rows replace target rows with the same key; unmatched target rows

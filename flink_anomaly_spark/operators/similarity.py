@@ -761,54 +761,6 @@ def _sub_l2(subvec: Column, codeword_sub: Column) -> Column:
     )
 
 
-def sub_l2_pandas(codewords: list[list[float]]):
-    """Arrow-batched twin of :func:`_sub_l2` against a FIXED codeword
-    list: one vectorized pandas UDF returning ``array<double>`` of the
-    per-codeword left-associated L2 distances for each input vector.
-
-    Bit-identity contract (test-pinned): for each codeword,
-    ``t_d = (x_d − c_d)``, ``s = ((0.0 + t_0²) + t_1²) + …`` — numpy's
-    ``cumsum`` over float64 IS the strict left-to-right fold (unlike
-    ``np.sum``/``np.add.reduce``, which use pairwise summation), and
-    elementwise subtract/multiply are the same IEEE ops Catalyst
-    evaluates, so the result equals the interpreted HOF to the last
-    bit.
-
-    Why it exists — and why it is NOT the default: the hypothesis was
-    the gram_hashes_pandas precedent (interpreted HOF lambdas ~10×
-    slower than an Arrow batch). MEASURED at sf0.1 (2000 vecs × 8
-    codewords × 64 dims, warm min-of-3): HOF fold 0.24 s vs this twin
-    0.50 s — for pure-arithmetic lambdas the interpreted fold WINS at
-    this shape (Arrow serialization dominates; the round-6 10× was
-    md5+concat lambdas, which are expensive per call). Consistent with
-    the ×100 probe: ivf_pq_rerank's x100 wall (200k vecs) equals its
-    base wall, i.e. the ANN family is fixed-overhead-bound at test
-    scale, not fold-bound. Kept with its bit-identity test as the
-    ready alternative for genuinely CPU-bound vector workloads (higher
-    dims × larger codebooks), where the crossover will flip — measure
-    before switching, as here.
-    """
-    import numpy as np
-
-    cw = [np.asarray(c, dtype=np.float64) for c in codewords]
-
-    @F.pandas_udf("array<double>")
-    def _dists(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            x = np.asarray(v, dtype=np.float64)
-            row = np.empty(len(cw), dtype=np.float64)
-            for j, c in enumerate(cw):
-                t = x - c
-                sq = t * t
-                # cumsum = strict left-associated fold; [-1] is the sum
-                row[j] = sq.cumsum()[-1] if sq.size else 0.0
-            out.append(row.tolist())
-        return pd.Series(out)
-
-    return _dists
-
-
 def pq_adc_topk(
     df: DataFrame,
     id_col: str,

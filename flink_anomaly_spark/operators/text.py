@@ -107,16 +107,6 @@ def lang_guess(col: Column) -> Column:
     return F.when(best["hits"] > 0, best["code"]).otherwise(F.lit("und"))
 
 
-def char_trigrams(col: Column) -> Column:
-    """Distinct character 3-grams of the lowercased text — sliding
-    ``substr`` over an index sequence (built-in only; ``Column.substr``
-    accepts Column positions where ``F.substring`` does not)."""
-    lowered = F.lower(col)
-    n = F.length(lowered)
-    idx = F.sequence(F.lit(1), F.greatest(n - 2, F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: lowered.substr(i, F.lit(3))))
-
-
 def lang_guess_ngram(col: Column) -> Column:
     """Char-trigram language ID: the language whose trigram profile
     overlaps the document's trigram set most (ties → language-code
@@ -1641,17 +1631,19 @@ def unigram_lm_oracle_sql(
     EM-prune iterations UNROLLED (one greedy-segmentation recursive CTE
     per iteration), sharing every constant with the engine. The
     position/candidate-substring grids are vocabulary-independent, so
-    they are built once and every iteration joins against them."""
+    they are built once and every iteration joins against them. Every
+    CTE a recursive step reads is ``MATERIALIZED``: DuckDB otherwise
+    inlines it and recomputes its whole join on each recursion step."""
     from flink_anomaly_spark.plans.fragments import TOKS
 
     maxp = UNIGRAM_MAX_PIECE
     head = f"""
     WITH RECURSIVE
-    w AS (
+    w AS MATERIALIZED (
       SELECT t AS word, CAST(count(*) AS BIGINT) AS cnt
       FROM (SELECT unnest({TOKS}) AS t FROM {table}) GROUP BY t
     ),
-    seed AS (
+    seed AS MATERIALIZED (
       SELECT piece FROM (
         SELECT piece, CAST(sum(cnt) AS BIGINT) AS n FROM (
           SELECT cnt, unnest(flatten(list_transform(range(2, {maxp + 1}),
@@ -1660,13 +1652,13 @@ def unigram_lm_oracle_sql(
           FROM w) GROUP BY piece)
       ORDER BY n DESC, piece ASC LIMIT {seed_m}
     ),
-    chars AS (
+    chars AS MATERIALIZED (
       SELECT DISTINCT unnest(list_transform(range(1, length(word) + 1),
                                             i -> substr(word, i, 1))) AS piece
       FROM w
     ),
-    v0 AS (SELECT piece FROM chars UNION SELECT piece FROM seed),
-    cand AS (
+    v0 AS MATERIALIZED (SELECT piece FROM chars UNION SELECT piece FROM seed),
+    cand AS MATERIALIZED (
       SELECT word, pos, L, substr(word, pos + 1, L) AS sub
       FROM (SELECT word, unnest(range(0, length(word))) AS pos FROM w) p,
            (SELECT unnest(range(1, {maxp + 1})) AS L) lens
@@ -1675,7 +1667,7 @@ def unigram_lm_oracle_sql(
     blocks = []
     for t in range(iters + 1):
         blocks.append(f""",
-    match{t} AS (
+    match{t} AS MATERIALIZED (
       SELECT c.word, c.pos, max_by(c.sub, c.L) AS best
       FROM cand c JOIN v{t} v ON c.sub = v.piece
       GROUP BY c.word, c.pos
@@ -1689,7 +1681,7 @@ def unigram_lm_oracle_sql(
       LEFT JOIN match{t} m ON m.word = s.word AND m.pos = s.pos
       WHERE s.pos < length(ww.word)
     ),
-    use{t} AS (
+    use{t} AS MATERIALIZED (
       SELECT coalesce(m.best, substr(s.word, s.pos + 1, 1)) AS piece,
              CAST(sum(ww.cnt) AS BIGINT) AS usage
       FROM seg{t} s
@@ -1700,14 +1692,14 @@ def unigram_lm_oracle_sql(
     )""")
         if t < iters:
             blocks.append(f""",
-    drop{t} AS (
+    drop{t} AS MATERIALIZED (
       SELECT piece FROM (
         SELECT v.piece, coalesce(u.usage, 0) AS uu
         FROM v{t} v LEFT JOIN use{t} u USING (piece)
         WHERE length(v.piece) >= 2)
       ORDER BY uu ASC, piece ASC LIMIT {prune_p}
     ),
-    v{t + 1} AS (SELECT v.piece FROM v{t} v
+    v{t + 1} AS MATERIALIZED (SELECT v.piece FROM v{t} v
       WHERE NOT EXISTS (SELECT 1 FROM drop{t} d WHERE d.piece = v.piece))""")
     tail = f"""
     SELECT v.piece, CAST(length(v.piece) AS BIGINT) AS piece_len,

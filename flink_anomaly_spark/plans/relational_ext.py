@@ -460,15 +460,17 @@ def _semdedup_oracle() -> str:
         f"(sqrt({_pair_dot('a.embedding', 'a.embedding')}) * "
         f"sqrt({_pair_dot('b.embedding', 'b.embedding')}))"
     )
+    # MATERIALIZED: DuckDB otherwise re-runs the pair join on every
+    # step of the recursive reachability CTE that reads ``edges``
     return f"""
     WITH RECURSIVE
-    v AS (SELECT vec_id, embedding, {_bucket_sql()} AS bucket FROM embeddings),
-    pairs AS (
+    v AS MATERIALIZED (SELECT vec_id, embedding, {_bucket_sql()} AS bucket FROM embeddings),
+    pairs AS MATERIALIZED (
       SELECT a.vec_id AS id1, b.vec_id AS id2
       FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
       WHERE round({cos}, 6) >= 0.3
     ),
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT id1 AS src, id2 AS dst FROM pairs
       UNION
       SELECT id2 AS src, id1 AS dst FROM pairs

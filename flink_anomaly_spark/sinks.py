@@ -15,16 +15,6 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 
 
-def sink_show(df: DataFrame, n: int = 20) -> None:
-    """K1 batch analog of ``.print()`` (Main.java:54)."""
-    df.show(n, truncate=False)
-
-
-def sink_console_stream(df: DataFrame):
-    """K1 streaming analog: console sink."""
-    return df.writeStream.format("console").trigger(availableNow=True).start()
-
-
 def write_text(df: DataFrame, path: str, max_records_per_file: int | None = None) -> None:
     """K2 batch: row-format text files; ``maxRecordsPerFile`` stands in
     for the reference's 1 GiB rolling policy (TestFlinkStreams.java:107-115)."""
@@ -60,18 +50,6 @@ def write_parquet(
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.parquet(path)
-
-
-def sink_file_stream(df: DataFrame, path: str, checkpoint: str, fmt: str = "text"):
-    """K2 streaming: checkpointed file sink (exactly-once via the
-    transactional file-sink commit log)."""
-    return (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def sink_split_stream(
@@ -309,75 +287,3 @@ def rollback_table(final_path: str, n_back: int = 1) -> str:
     os.symlink(os.path.basename(target), tmp_link)
     os.replace(tmp_link, final_path)
     return target
-
-
-def table_changes(spark, final_path: str, from_back: int, to_back: int = 0) -> DataFrame:
-    """Change data feed between two retained WAP versions (Delta CDF on
-    plain parquet): rows present in the newer version but not the older
-    are ``_change_type='insert'``; the reverse are ``'delete'``; an
-    updated row appears as a delete+insert pair — CDF's representation
-    when no tracking column exists. Bag semantics via ``exceptAll``
-    (duplicate rows diff by multiplicity).
-
-    Scale shape: two scans + one hash-partitioned exceptAll each way on
-    the full row — the same cost as the snapshot_diff_orders query; at
-    100 TB a keyed variant (diff on a primary key + content hash)
-    shrinks the exchange to (key, hash) pairs, which is what
-    snapshot_diff_orders already demonstrates."""
-    from pyspark.sql import functions as F2
-
-    new = read_table_version(spark, final_path, to_back)
-    old = read_table_version(spark, final_path, from_back)
-    ins = new.exceptAll(old).withColumn("_change_type", F2.lit("insert"))
-    dels = old.exceptAll(new).withColumn("_change_type", F2.lit("delete"))
-    return ins.unionAll(dels)
-
-
-def compact_table(
-    spark,
-    final_path: str,
-    target_file_bytes: int = 128 << 20,
-    keep_versions: int = 1,
-    shuffle: bool = False,
-) -> dict:
-    """EXECUTE small-file compaction on a WAP table (the OPTIMIZE /
-    rewriteDataFiles maintenance action; ``compaction_file_plan`` is
-    the planning half). The compacted data is republished THROUGH
-    write_audit_publish with a row-count-preservation audit, so a
-    compaction is atomic, auditable, versioned — and reversible via
-    ``rollback_table`` (the pre-compaction version is retained).
-
-    ``shuffle=False`` (default) coalesces to the target file count —
-    no exchange, file sizes approximate; ``shuffle=True`` repartitions
-    for evenly-sized output at the cost of one round-robin shuffle
-    (what a real OPTIMIZE pays for clustering). Returns before/after
-    file counts and bytes."""
-    import math
-    import os
-
-    def _part_files(d: str) -> list[str]:
-        return [
-            e.path
-            for e in os.scandir(d)
-            if e.is_file() and e.name.startswith("part-")
-        ]
-
-    live = os.path.realpath(final_path)
-    before = _part_files(live)
-    bytes_before = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, math.ceil(bytes_before / target_file_bytes))
-    df = spark.read.parquet(final_path)
-    expected = df.count()
-    compacted = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    audits = [lambda staged: ("row_count_preserved", staged.count() == expected)]
-    results = write_audit_publish(
-        compacted, final_path, audits, keep_versions=keep_versions
-    )
-    after = _part_files(os.path.realpath(final_path))
-    return {
-        "files_before": len(before),
-        "bytes_before": bytes_before,
-        "files_after": len(after),
-        "bytes_after": sum(os.path.getsize(f) for f in after),
-        "audits": results,
-    }

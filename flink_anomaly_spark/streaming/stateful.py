@@ -64,69 +64,6 @@ def running_concat_stream(events: DataFrame, key: str = "event_type") -> DataFra
     )
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf in the Python
-    workers (its state protocol is protobuf-based); absent in minimal
-    containers → fall back to applyInPandasWithState."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_concat_stream_tws(events: DataFrame, key: str = "event_type") -> DataFrame:
-    """Same operator on the Spark 4 ``transformWithStateInPandas`` API
-    (SURVEY §7.4: prefer the newer API where available; both are kept —
-    applyInPandasWithState for 3.4+ compatibility, this for the 4.x
-    ValueState surface, which is the literal analog of the reference's
-    ``ValueStateDescriptor`` registration in ``open()``,
-    Main.java:76-82). Requires google.protobuf (see tws_available)."""
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf in the "
-            "Python workers; use running_concat_stream (applyInPandasWithState)"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ConcatProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # ValueState<String>, exactly like the reference's descriptor
-            self._state = handle.getValueState("concat", "concat string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            (concat,) = self._state.get() if self._state.exists() else ("",)
-            # concatenate ALL chunks before sorting (see _concat_fn)
-            pdf = pd.concat(list(rows), ignore_index=True).sort_values(["ts", "event_id"])
-            out_ids, out_prefix = [], []
-            for eid in pdf["event_id"]:
-                concat = f"{concat},{eid}" if concat else str(eid)
-                out_ids.append(eid)
-                out_prefix.append(concat)
-            yield pd.DataFrame(
-                {"key": key[0], "event_id": out_ids, "running_concat": out_prefix}
-            )
-            self._state.update((concat,))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select(F.col(key).alias("key"), "event_id", "ts")
-        .groupBy("key")
-        .transformWithStateInPandas(
-            ConcatProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Stateful streaming anomaly detection: per-key running z-score
 # ---------------------------------------------------------------------------

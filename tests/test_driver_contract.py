@@ -92,3 +92,28 @@ def test_bench_emits_driver_json(spark, capsys, monkeypatch, tmp_path):
     detail = json.load(open(detail_tmp))
     assert detail["queries"] == full["queries"]
     assert headline["detail_file"] == detail_tmp
+
+
+def test_docs_name_existing_paths():
+    """Every repo path a doc, docstring or comment names must exist, so
+    a deleted tool or document cannot stay cited. Scans README.md, the
+    verify skill notes, docs/*.md and the package and test sources;
+    CHANGES.md and ROADMAP.md are history and are left out."""
+    import re
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    files = [root / "README.md", root / ".claude" / "skills" / "verify" / "SKILL.md"]
+    files += root.glob("docs/*.md")
+    for pkg in ("flink_anomaly_spark", "tests"):
+        files += root.glob(f"{pkg}/**/*.py")
+    path_re = re.compile(
+        r"(?<![\w./-])(?:tools|docs|flink_anomaly_spark|tests)/[\w./-]*?\.(?:py|md|json)\b"
+    )
+    missing = [
+        f"{f.relative_to(root)}: {path}"
+        for f in files
+        for path in path_re.findall(f.read_text(encoding="utf-8"))
+        if not (root / path).exists()
+    ]
+    assert not missing, "docs name paths that do not exist:\n" + "\n".join(missing)

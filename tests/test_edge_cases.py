@@ -97,7 +97,7 @@ def test_text_profile_oracle_agreement_on_edges(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-2 regression tests (ADVICE.md findings)
+# Round-2 regression tests (review findings; see commit b04c304)
 # ---------------------------------------------------------------------------
 
 

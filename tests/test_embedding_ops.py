@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from flink_anomaly_spark.operators.similarity import (
     collect_dim_minmax,
@@ -210,38 +209,6 @@ def test_hybrid_rrf_honors_custom_vector_column_name(spark):
     assert [(r.doc_id, r.rrf_score) for r in base] == [
         (r.doc_id, r.rrf_score) for r in custom
     ]
-
-
-def test_sub_l2_pandas_bit_identical_to_hof_fold(spark):
-    """The Arrow-batched L2 twin (round-8 prep) must equal the
-    interpreted HOF fold to the LAST BIT on adversarial float inputs —
-    numpy cumsum is the strict left-associated fold, so any divergence
-    means the twin cannot replace the Catalyst expression."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from flink_anomaly_spark.operators.similarity import _sub_l2, sub_l2_pandas
-
-    rng = random.Random(7)
-    dim = 16
-    cws = [[rng.uniform(-3, 3) for _ in range(dim)] for _ in range(5)]
-    rows = [(i, [rng.uniform(-1e3, 1e3) * 10 ** rng.randint(-6, 3) for _ in range(dim)])
-            for i in range(64)]
-    df = spark.createDataFrame(rows, "id long, v array<double>")
-    hof = df.select(
-        "id",
-        *[
-            _sub_l2(F.col("v"), F.array(*[F.lit(float(x)) for x in c])).alias(f"d{j}")
-            for j, c in enumerate(cws)
-        ],
-    )
-    want = {r.id: [r[f"d{j}"] for j in range(len(cws))] for r in hof.collect()}
-    got = {
-        r.id: list(r.d)
-        for r in df.select("id", sub_l2_pandas(cws)(F.col("v")).alias("d")).collect()
-    }
-    assert got == want  # exact float equality, not approx
 
 
 def test_mmr_diversifies_and_matches_reference(spark):

@@ -489,9 +489,9 @@ def test_semantic_decontamination_eval_side_broadcasts(spark):
     """VERDICT r4 #6: the EVAL side (benchmark-sized by nature) must be
     the broadcast side of the bucket equi-join, so the corpus side
     streams without an exchange for the join itself — at 100 TB the
-    corpus never shuffles to meet the eval set. The bucket-space
-    sizing probe (tools/lsh_bucket_probe.py) asserts the same contract
-    at a ×25 corpus; this pins it at test scale."""
+    corpus never shuffles to meet the eval set. docs/SCALE_NOTES.md
+    records the same contract measured at a ×25 corpus; this pins it
+    at test scale."""
     plan = physical_plan(_Q["semantic_decontamination"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan, plan
     # the broadcast exchange must exist and there must be no

@@ -1,6 +1,6 @@
 """Round-13 optimization tests.
 
-Covers the streaming state-partition sizing (OPTIMIZATION_r13.md): the
+Covers the streaming state-partition sizing (measured in commit a897cb8): the
 formula's clamps and override, and — the part that guards the bench's
 integrity — that the shared runners RESTORE the session's shuffle
 partitions after the streaming query drains, so later batch queries in
@@ -26,7 +26,7 @@ def test_state_partitions_formula_clamps(spark, monkeypatch):
     monkeypatch.setattr(P, "_STREAM_SOURCE_BYTES", None)
     assert P.stream_state_partitions(spark) is None
     # tiny source -> the floor of 4 (1 partition over-serializes the
-    # stateful stage; measured in OPTIMIZATION_r13.md)
+    # stateful stage; measured in commit a897cb8)
     monkeypatch.setattr(P, "_STREAM_SOURCE_BYTES", 10)
     assert P.stream_state_partitions(spark) == min(4, par) or (
         P.stream_state_partitions(spark) == 4

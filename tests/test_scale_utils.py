@@ -169,6 +169,8 @@ def test_sql_text_interface(spark):
 
 
 def test_grouped_udaf_weighted_mean(spark):
+    import warnings
+
     import pandas as pd
 
     from flink_anomaly_spark.functions.registry import grouped_udaf
@@ -181,12 +183,12 @@ def test_grouped_udaf_weighted_mean(spark):
             {"event_type": [key[0]], "wmean": [round((pdf["value"] * w).sum() / w.sum(), 4)]}
         )
 
-    got = {
-        r.event_type: r.wmean
-        for r in grouped_udaf(
-            events, "event_type", weighted_mean, "event_type string, wmean double"
-        ).collect()
-    }
+    # the wrapper's type hints must be complete: an unannotated
+    # parameter makes pyspark warn that it cannot infer the eval type
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        udaf = grouped_udaf(events, "event_type", weighted_mean, "event_type string, wmean double")
+    got = {r.event_type: r.wmean for r in udaf.collect()}
     assert len(got) == 5
     # cross-check one group in plain pandas
     pdf = events.filter(F.col("event_type") == "click").select("user_id", "value").toPandas()

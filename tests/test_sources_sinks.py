@@ -350,62 +350,3 @@ def test_wap_time_travel_and_rollback(spark, tmp_path):
     frame = spark.range(0, 50).select(F.col("id"), F.lit("v5").alias("tag"))
     write_audit_publish(frame, final, ok)
     assert len(list_table_versions(final)) == 1
-
-
-def test_table_changes_cdf(spark, tmp_path):
-    """Change data feed between retained WAP versions: inserts, deletes,
-    and updates (delete+insert pair) with bag semantics."""
-    from flink_anomaly_spark.sinks import table_changes, write_audit_publish
-
-    final = str(tmp_path / "t")
-    ok = [lambda df: ("nonempty", df.count() > 0)]
-    v1 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c"), (3, "c")], ["id", "val"]
-    )  # duplicate row on purpose
-    write_audit_publish(v1, final, ok, keep_versions=2)
-    v2 = spark.createDataFrame(
-        [(1, "a"), (2, "B"), (3, "c"), (4, "d")], ["id", "val"]
-    )  # 2 updated, one dup copy of 3 removed, 4 inserted
-    write_audit_publish(v2, final, ok, keep_versions=2)
-    changes = {
-        ((r.id, r.val), r._change_type): 1
-        for r in table_changes(spark, final, from_back=1).collect()
-    }
-    assert set(changes) == {
-        ((2, "B"), "insert"),
-        ((4, "d"), "insert"),
-        ((2, "b"), "delete"),
-        ((3, "c"), "delete"),  # multiplicity drop 2 -> 1
-    }
-    # no-change diff is empty
-    assert table_changes(spark, final, from_back=0, to_back=0).count() == 0
-
-
-def test_compact_table_executes_and_is_reversible(spark, tmp_path):
-    """Compaction executor: many small files -> few, row count audited
-    and preserved, pre-compaction version retained so the maintenance
-    action itself can be rolled back."""
-    from flink_anomaly_spark.sinks import (
-        compact_table,
-        list_table_versions,
-        rollback_table,
-        write_audit_publish,
-    )
-
-    final = str(tmp_path / "t")
-    df = spark.range(0, 2000).select(
-        F.col("id"), F.concat(F.lit("row"), F.col("id")).alias("val")
-    )
-    # publish with deliberately tiny files (many part files)
-    write_audit_publish(
-        df.repartition(16), final, [lambda d: ("nonempty", d.count() > 0)]
-    )
-    stats = compact_table(spark, final, target_file_bytes=1 << 30)
-    assert stats["files_before"] == 16
-    assert stats["files_after"] == 1
-    assert stats["audits"] == [("row_count_preserved", True)]
-    assert spark.read.parquet(final).count() == 2000
-    # the pre-compaction version is retained -> rollback restores it
-    assert len(list_table_versions(final)) == 2
-    rollback_table(final, 1)
-    assert spark.read.parquet(final).count() == 2000

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from flink_anomaly_spark.streaming.pipelines import (
@@ -146,36 +145,6 @@ def test_streaming_running_concat_state(spark):
             .running_concat
         )
         assert len(longest.split(",")) == r.n
-
-
-def test_transform_with_state_matches_apply_in_pandas(spark):
-    """The Spark-4 transformWithStateInPandas implementation must
-    produce the same per-key final state as applyInPandasWithState.
-    (Skipped where google.protobuf is absent — the TWS state protocol
-    needs it; this container ships without it.)"""
-    from flink_anomaly_spark.streaming.stateful import (
-        running_concat_stream_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf not available — transformWithStateInPandas unusable")
-
-    old = run_to_memory(running_concat_stream(stream_events(spark, SF_SMOKE)))
-    new = run_to_memory(running_concat_stream_tws(stream_events(spark, SF_SMOKE)))
-    assert old.count() == new.count()
-
-    def finals(df):
-        agg = df.groupBy("key").agg(F.max(F.length("running_concat")).alias("m"))
-        out = {}
-        for r in agg.collect():
-            row = df.filter(
-                (F.col("key") == r.key) & (F.length("running_concat") == r.m)
-            ).first()
-            out[r.key] = row.running_concat
-        return out
-
-    assert finals(old) == finals(new)
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
