@@ -33,6 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_anomaly_spark.plans.registry import all_queries
+from flink_anomaly_spark.resources import release_cached
 from flink_anomaly_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -43,8 +44,6 @@ def time_queries(spark, sf_dir: str, queries: dict) -> dict[str, float]:
     # one warm run per query (JVM warm-up, parquet footer cache, Catalyst
     # codegen compile, Python worker pool) — the timed second run measures
     # steady-state execution, which is what scales with data volume
-    from flink_anomaly_spark.operators.dedup import release_cached
-
     timings: dict[str, float] = {}
     for name, fn in queries.items():
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()

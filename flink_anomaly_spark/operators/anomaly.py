@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_anomaly_spark.resources import persist
+
 
 def zscore_outliers(
     df: DataFrame,
@@ -209,7 +211,6 @@ def kmeans_lloyd_outliers(
       top-N via orderBy+limit (TakeOrderedAndProject: per-partition
       heap + driver merge of top_n rows, never a single-task window).
     """
-    from flink_anomaly_spark.operators.dedup import _persist
     from flink_anomaly_spark.operators.similarity import (
         collect_centroids,
         cosine,
@@ -243,8 +244,9 @@ def kmeans_lloyd_outliers(
     # persisted: the feature frame feeds n_iter update passes plus the
     # final scoring pass — without it each pass re-scans the corpus
     # (3 full reads at n_iter=2), the standard iterative-trainer cache
-    # (guide §5: reuse × recompute-cost; released via release_cached)
-    base = _persist(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
+    # (guide §5: reuse × recompute-cost; released via
+    # resources.release_cached)
+    base = persist(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
     for _ in range(n_iter):
         assigned = base.select(
             "v", F.array_max(scores(cents))["cell"].alias("cell")
@@ -340,8 +342,6 @@ def hbos_outliers(
     is scanned twice (once per histogram pass folds into one shared
     scan per feature aggregation) and never shuffled whole.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
     bounds = df.agg(
         F.min(value_col).alias("__vmin"), F.max(value_col).alias("__vmax")
     )
@@ -371,7 +371,7 @@ def hbos_outliers(
     # persisted: both histogram passes and the final scoring join read
     # this narrow (id, hour, bin) projection — without the cache each
     # consumer rescans the corpus and recomputes the vmax aggregate
-    binned = _persist(binned)
+    binned = persist(binned)
     hist_v = binned.groupBy("__bv").agg(F.count("*").alias("__cv"))
     hist_h = binned.groupBy("__h").agg(F.count("*").alias("__ch"))
     maxes = hist_v.agg(F.max("__cv").alias("__mv")).crossJoin(
@@ -678,7 +678,6 @@ def lof_outliers(
     points have no neighborhood and drop out (LOF undefined), same on
     both engines.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
     from flink_anomaly_spark.operators.relational import top_k_per_group
     from flink_anomaly_spark.operators.similarity import (
         _dim_of,
@@ -688,7 +687,7 @@ def lof_outliers(
     from flink_anomaly_spark.partitioning import spread
 
     planes = hyperplane_matrix(n_planes, _dim_of(df, vec_col))
-    base = _persist(
+    base = persist(
         spread(
             df.select(
                 F.col(id_col).alias("__nid"),
@@ -717,7 +716,7 @@ def lof_outliers(
         .filter(F.col("__nid") != F.col("__qid"))
         .select("__qid", "__nid", F.round(l2, 6).alias("__d"))
     )
-    edges = _persist(
+    edges = persist(
         top_k_per_group(
             pairs,
             group_cols=["__qid"],

@@ -28,54 +28,10 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from flink_anomaly_spark.partitioning import spread
-
-#: Persisted intermediates handed out by the operators below. The
-#: operators return LAZY DataFrames, so they cannot unpersist before the
-#: caller's action — instead every persist() is tracked here and callers
-#: that run many pipelines in one session (bench loop, oracle gate)
-#: release between queries via :func:`release_cached`. Strong refs on
-#: purpose: the JVM-side cache outlives the Python wrapper, so a weak
-#: set would lose the only handle able to unpersist it. The list holds
-#: plan objects (tiny); the executor memory they pin is the leak being
-#: managed.
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def release_cached() -> int:
-    """Unpersist every cached intermediate created by dedup operators.
-
-    Returns the number of DataFrames released. Safe to call at any time:
-    a consumer that re-scans a released plan recomputes it (correctness
-    is unaffected, only the branch-sharing speedup).
-
-    Also runs a Python ``gc.collect()``: ``localCheckpoint`` blocks (the
-    CC/pagerank/kcore lineage truncation) are only dropped by Spark's
-    ContextCleaner once the DRIVER-side RDD reference is garbage-
-    collected, and CPython's cyclic collector lags the query loop — a
-    many-query session accumulated 10-20 live checkpoint RDD block sets
-    and the checkpoint-heavy queries degraded 15-60 % vs a fresh
-    session. With the explicit collect the stored-RDD count stays at
-    the per-query working set (5-10) and in-loop times match fresh-
-    session probes (measured in commit a897cb8; collect cost is ~10 ms,
-    outside every timed region)."""
-    import gc
-
-    n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
-    gc.collect()
-    return n
+from flink_anomaly_spark.resources import persist, truncator
+# Re-exported for perfbench/batch.py, which imports it from here; new
+# callers import it from flink_anomaly_spark.resources.
+from flink_anomaly_spark.resources import release_cached  # noqa: F401
 
 # 61-bit Mersenne prime — all (a*h+b) % P arithmetic stays in int64
 # without overflow concerns for h < 2^60.
@@ -391,7 +347,7 @@ def minhash_near_dup_pairs(
     # three plan branches consume sig (banding + two verification
     # joins); without persist the shingle+md5 projection — the
     # dominant CPU cost — re-executes in each branch
-    sig = _persist(projected)
+    sig = persist(projected)
 
     banded = sig.select(
         "id",
@@ -443,31 +399,6 @@ def minhash_near_dup_pairs(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id1", "id2", "jaccard")
     )
-
-
-def _truncate_fn(df_session_src: DataFrame, reliable_checkpoint_dir: str | None):
-    """Lineage-truncation strategy shared by the CC algorithms.
-
-    By default ``localCheckpoint`` — blocks live on executors, zero
-    external storage, right for single-node / sandbox runs. On a real
-    cluster an executor loss mid-iteration destroys a localCheckpoint
-    block with NO lineage to recompute it, killing the job — pass
-    ``reliable_checkpoint_dir`` (HDFS/S3 path) to use reliable
-    ``checkpoint()`` storage that survives executor loss. The dir is
-    set once per SparkContext; passing a different dir re-points it.
-    """
-    if reliable_checkpoint_dir is not None:
-        sc = df_session_src.sparkSession.sparkContext
-        sc.setCheckpointDir(reliable_checkpoint_dir)
-
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    return _truncate
 
 
 def connected_components(
@@ -524,7 +455,7 @@ def connected_components(
         raise ValueError(
             f"unknown algorithm {algorithm!r}: use 'auto', 'label_prop' or 'star'"
         )
-    _truncate = _truncate_fn(pairs, reliable_checkpoint_dir)
+    _truncate = truncator(pairs, reliable_checkpoint_dir)
     # materialize the candidate-pair pipeline ONCE; the symmetric /
     # canonical edge views below are cheap projections of these blocks
     p = _truncate(pairs.select(F.col("id1"), F.col("id2")))
@@ -776,7 +707,7 @@ def simhash_near_dup_pairs(
         raise ValueError(f"bands ({bands}) must divide n_bits ({n_bits})")
     width = n_bits // bands
     mask = (1 << width) - 1
-    fps = _persist(
+    fps = persist(
         spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))).select(
             "id", simhash60_pandas()(F.col("__text")).alias("fp")
         )
@@ -872,7 +803,7 @@ def ngram_jaccard_pairs(
     # sizes branch then reads |sh| with a narrow scan of the cache — an
     # exploded-postings cache was tried and measured ~0.6 s slower at
     # sf0.1 because sizes turns into an extra groupBy shuffle
-    sh = _persist(base.select("id", "blk", gram_col.alias("sh")))
+    sh = persist(base.select("id", "blk", gram_col.alias("sh")))
     sizes = sh.select("id", F.size("sh").alias("n_sh"))
     postings = sh.select("blk", F.col("id"), F.explode("sh").alias("s"))
     if hash_grams:
@@ -921,7 +852,7 @@ def minhash_estimate_accuracy(
     projected = base.withColumn(
         "__b", shingle_sig_pandas(k_shingle, num_perm)(F.col("__text"))
     ).select("id", F.col("__b.sh").alias("sh"), F.col("__b.sig").alias("sig"))
-    sig = _persist(projected)
+    sig = persist(projected)
     banded = sig.select(
         "id",
         F.explode(
@@ -1014,7 +945,7 @@ def minhash_pairs_between(
     projected = base.withColumn(
         "__b", shingle_sig_pandas(k_shingle, num_perm)(F.col("__text"))
     ).select("id", "tag", F.col("__b.sh").alias("sh"), F.col("__b.sig").alias("sig"))
-    sig = _persist(projected)
+    sig = persist(projected)
 
     banded = sig.select(
         "id",
@@ -1103,7 +1034,7 @@ def prefix_filter_jaccard_pairs(
             F.col("__text").rlike(r"\S")
         )
     )
-    toksets = _persist(
+    toksets = persist(
         base.select(
             "id",
             F.array_distinct(shingles(F.col("__text"), k_shingle)).alias("toks"),
@@ -1226,7 +1157,6 @@ def exact_substring_spans(
     Two shuffles: the gram-count groupBy and the postings join.
     """
     from flink_anomaly_spark.operators.text import tokens
-    from flink_anomaly_spark.partitioning import spread
 
     base = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
     d = base.select("id", tokens(F.col("__t")).alias("toks"))
@@ -1300,7 +1230,6 @@ def span_dedup_clean(
     oracle's clean empty row.
     """
     from flink_anomaly_spark.operators.text import tokens
-    from flink_anomaly_spark.partitioning import spread
 
     base = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
     d = base.select("id", tokens(F.col("__t")).alias("toks"))
@@ -1535,7 +1464,7 @@ def sorted_neighborhood_pairs(
             ).alias("off"),
         )
     )
-    ranked = _persist(
+    ranked = persist(
         base.join(offs, "pfx").select(
             "id", "t", "n", (per + F.col("off")).cast("bigint").alias("rk")
         )
@@ -1654,7 +1583,7 @@ def sorted_neighborhood_multipass(
             )
         ),
     )
-    base = _persist(
+    base = persist(
         df.select(F.col(id_col).alias("id"), t.alias("t")).select(
             "id",
             "t",
@@ -1729,7 +1658,7 @@ def containment_dup_pairs(
     base = spread(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     )
-    sh = _persist(
+    sh = persist(
         base.select(
             "id",
             F.array_distinct(shingles(F.col("__text"), n)).alias("sh"),
@@ -1806,7 +1735,7 @@ def allpairs_binary_cosine(
         "__id",
         F.explode(F.array_distinct(shingles(F.col("__t"), k_shingle))).alias("__t"),
     )
-    sh = _persist(sh)
+    sh = persist(sh)
     keep = sh.groupBy("__t").agg(F.count("*").alias("__df")).filter(
         F.col("__df") <= max_df
     )
@@ -1816,7 +1745,7 @@ def allpairs_binary_cosine(
     # join-above-the-cache subtree (df-cap agg + join) executed FOUR
     # times in the final adaptive plan; at 100 TB that is four
     # corpus-shingle passes instead of one (r12 optimization).
-    postings = _persist(sh.join(keep.select("__t"), "__t"))
+    postings = persist(sh.join(keep.select("__t"), "__t"))
     sizes = postings.groupBy("__id").agg(F.count("*").cast("bigint").alias("__sz"))
     a = postings.select(F.col("__id").alias("id1"), "__t")
     b = postings.select(F.col("__id").alias("id2"), "__t")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from flink_anomaly_spark.resources import persist, truncator
+
 
 def pagerank(
     edges: DataFrame,
@@ -45,9 +47,7 @@ def pagerank(
     (id, pr) with pr rounded to 6 (sum-order ulp across engines is
     ~1e-15 per step).
     """
-    from flink_anomaly_spark.operators.dedup import _truncate_fn
-
-    truncate = _truncate_fn(edges, reliable_checkpoint_dir)
+    truncate = truncator(edges, reliable_checkpoint_dir)
     # each rank frame is consumed by TWO branches per iteration (dangling
     # mass + contributions) and feeds the next — without truncation the
     # lineage (and the edge derivation, e.g. a minhash pair pipeline)
@@ -133,9 +133,7 @@ def bfs_distances(
     per level). Fixed depth keeps it deterministic and oracle-unrollable
     (the kmeans/pagerank/BPE pattern); distances are exact ints.
     """
-    from flink_anomaly_spark.operators.dedup import _truncate_fn
-
-    truncate = _truncate_fn(edges, reliable_checkpoint_dir)
+    truncate = truncator(edges, reliable_checkpoint_dir)
     edges = truncate(edges.select("src", "dst"))
     dist = seeds.select(F.col("id"), F.lit(0).cast("bigint").alias("dist"))
     # early exit at the fixpoint (r12 optimization): per level, existing
@@ -214,9 +212,7 @@ def kcore(
     and is checkpoint-truncated per peel so lineage stays O(1) like
     connected_components.
     """
-    from flink_anomaly_spark.operators.dedup import _truncate_fn
-
-    truncate = _truncate_fn(edges, reliable_checkpoint_dir)
+    truncate = truncator(edges, reliable_checkpoint_dir)
     obs0 = Observation()
     sym = truncate(
         edges.select("src", "dst").observe(obs0, F.count(F.lit(1)).alias("n"))
@@ -277,9 +273,7 @@ def local_clustering_coeff(pairs: DataFrame, min_degree: int = 2) -> DataFrame:
     near-dup graph — AQE broadcasts it while small, shuffles past the
     threshold; a forced hint is the OOM case, not the safe one).
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
-    e = _persist(pairs.select(F.col("a").cast("long"), F.col("b").cast("long")))
+    e = persist(pairs.select(F.col("a").cast("long"), F.col("b").cast("long")))
     tri = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1.b") == F.col("e2.a"))

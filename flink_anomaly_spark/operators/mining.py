@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_anomaly_spark.resources import persist
+
 # ---------------------------------------------------------------------------
 # Pareto frontier (2D skyline)
 # ---------------------------------------------------------------------------
@@ -109,8 +111,6 @@ def frequent_item_pairs(
     market-basket guard). Pair counting is map-side combinable; only
     (item, item, count) triples reach the reduce side.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
     items = df.select(
         F.col(basket_col).alias("__bk"), F.col(item_col).alias("__it")
     ).distinct()
@@ -119,7 +119,7 @@ def frequent_item_pairs(
     # persisted: three consumers (pair join, item frequencies, basket
     # total) would otherwise each replay distinct + cap — the winnowing
     # shared-frame pattern
-    items = _persist(items.join(ok, "__bk"))
+    items = persist(items.join(ok, "__bk"))
     pairs = (
         items.alias("a")
         .join(items.alias("b"), "__bk")
@@ -530,9 +530,8 @@ def tv_drift_daily(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     operator by construction)."""
     day = F.date_trunc("day", F.col(ts_col))
     b = df.select(day.alias("day"), tv_hist_bin(value_col).alias("bin"))
-    from flink_anomaly_spark.operators.dedup import _persist
 
-    b = _persist(b)  # two consumers: reference build + daily counts
+    b = persist(b)  # two consumers: reference build + daily counts
     ref = (
         b.filter(F.col("day") < F.lit(TV_REF_END).cast("timestamp"))
         .groupBy("bin")
@@ -643,12 +642,11 @@ def ks_drift_matrix(
         .orderBy("__c")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    from flink_anomaly_spark.operators.dedup import _persist
 
     # persisted: the pair stage reads the ECDF frame twice (both sides
     # of the self-join); the frame is grid-bounded (|domain|·|groups|
     # rows), so the cache is small and saves a full corpus re-aggregation
-    ecdf = _persist(
+    ecdf = persist(
         dense.withColumn("__cum", F.sum("__cnt").over(w)).select(
             "__g", "__c", "__cum"
         )
@@ -1123,9 +1121,8 @@ def mann_kendall_trend(
         .groupBy("__k", "__d")
         .agg(F.expr("CAST(FLOOR(sum(__c) / 100) AS BIGINT)").alias("__y"))
     )
-    from flink_anomaly_spark.operators.dedup import _persist
 
-    daily = _persist(daily)
+    daily = persist(daily)
     a = daily.select("__k", F.col("__d").alias("__da"), F.col("__y").alias("__ya"))
     b = daily.select("__k", F.col("__d").alias("__db"), F.col("__y").alias("__yb"))
     s_stat = (
@@ -1409,8 +1406,6 @@ def ccf_daily(
     1-row moment agg; max_lag+1 tiny joins total, never a corpus-sized
     exchange after the first agg.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
     day = F.date_trunc("day", F.col(ts_col))
     cents = F.round(F.col(value_col) * 100).cast("bigint")
     daily = (
@@ -1425,7 +1420,7 @@ def ccf_daily(
         .groupBy("__k", "__d")
         .agg(F.expr("CAST(FLOOR(sum(__c) / 100) AS BIGINT)").alias("__y"))
     )
-    daily = _persist(daily)
+    daily = persist(daily)
     a = daily.filter(F.col("__k") == key_a).select(
         F.col("__d").alias("__da"), F.col("__y").alias("__ya")
     )
@@ -1497,9 +1492,8 @@ def kendall_tau_daily(
             F.expr("CAST(FLOOR(sum(__c) / 100) AS BIGINT)").alias("__y"),
         )
     )
-    from flink_anomaly_spark.operators.dedup import _persist
 
-    daily = _persist(daily)
+    daily = persist(daily)
     a = daily.select(
         "__k",
         F.col("__d").alias("__da"),
@@ -1760,13 +1754,11 @@ def robust_daily_outliers(
     day-pair joins (calendar-bounded), then one |keys|-row join back
     onto the |key·days| daily frame.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
     # ONE corpus scan + (key, day) aggregate feeds the chart, HL, and
     # Sn (round-11 review: the three inline copies did not collapse —
     # 0 ReusedExchange, 5 parquet scans in the executed plan; the
     # persisted |keys·days|-row frame makes it 1 scan + cached reuse)
-    daily = _persist(_daily_units(df, key_col, ts_col, value_col))
+    daily = persist(_daily_units(df, key_col, ts_col, value_col))
     hl = hodges_lehmann_from_daily(daily).select(
         "__k", F.col("hl_location").alias("__hl")
     )

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_anomaly_spark.resources import persist
+
 # ---------------------------------------------------------------------------
 # Reference-parity primitives
 # ---------------------------------------------------------------------------
@@ -447,9 +449,7 @@ def hot_key_skew_report(
     round-6 finding). The per-key frame is persisted because the total
     and the top-n both consume it.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
-    per_key = _persist(
+    per_key = persist(
         df.groupBy(F.col(key_col).alias("key")).agg(F.count("*").alias("key_rows"))
     )
     total = per_key.agg(F.sum("key_rows").cast("bigint").alias("total_rows"))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from flink_anomaly_spark.operators.relational import top_k_per_group
 from flink_anomaly_spark.partitioning import spread
+from flink_anomaly_spark.resources import persist
 
 
 def _sql_double(x: float) -> str:
@@ -462,7 +463,6 @@ def mmr_diversified_topk(
     is inherent to its greedy definition — the right place for it is
     the rerank tier, not k cluster jobs.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
     from flink_anomaly_spark.operators.relational import top_k_per_group
 
     base = spread(df.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")))
@@ -475,7 +475,7 @@ def mmr_diversified_topk(
         "nvec",
         F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("simq"),
     )
-    pool = _persist(
+    pool = persist(
         top_k_per_group(
             scored,
             group_cols=["qid"],
@@ -1344,8 +1344,6 @@ def ivf_pq_rerank_topk(
     """
     from pyspark.sql import Window
 
-    from flink_anomaly_spark.operators.dedup import _persist
-
     scored, qvec = _ivf_pq_scored(
         df,
         id_col,
@@ -1357,7 +1355,7 @@ def ivf_pq_rerank_topk(
         n_probe,
         keep_vec=True,
     )
-    scored = _persist(scored)
+    scored = persist(scored)
     top_sl = (
         scored.drop("v")
         .orderBy(F.col("adc_micro").asc(), F.col("id").asc())
@@ -1472,10 +1470,8 @@ def knn_graph_stats(
     BIGINT MICRO-UNITS of the 6-rounded cosine (float SUM order never
     differs across engines) with one terminal division.
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
     planes = hyperplane_matrix(n_planes, _dim_of(df, vec_col))
-    base = _persist(
+    base = persist(
         spread(
             df.select(
                 F.col(id_col).alias("__nid"),
@@ -1501,7 +1497,7 @@ def knn_graph_stats(
             F.round(cosine(F.col("__qvec"), F.col("__nvec")), 6).alias("__cos"),
         )
     )
-    edges = _persist(
+    edges = persist(
         top_k_per_group(
             scored,
             group_cols=["__qid"],

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_anomaly_spark.operators.dedup import md5_int32
+from flink_anomaly_spark.resources import persist
 
 # ---------------------------------------------------------------------------
 # HyperLogLog (Flajolet et al. 2007), deterministic md5 register build
@@ -320,9 +321,7 @@ def countmin_term_estimates(
 
     from flink_anomaly_spark.operators.text import tokens
 
-    from flink_anomaly_spark.operators.dedup import _persist
-
-    vocab = _persist(
+    vocab = persist(
         docs.select(F.explode(tokens(F.col(text_col))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("cnt"))

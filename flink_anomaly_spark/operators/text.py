@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_anomaly_spark.partitioning import spread
+from flink_anomaly_spark.resources import persist
 
 #: tiny deterministic stopword list used by the quality score
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
@@ -680,9 +681,7 @@ def unigram_logprob_quality(
     """
     from pyspark.sql import Window
 
-    from flink_anomaly_spark.operators.dedup import _persist
-
-    g = _persist(
+    g = persist(
         spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
         .select("id", F.explode(tokens(F.col("__t"))).alias("tk"))
         .groupBy("id", "tk")
@@ -814,15 +813,13 @@ def bigram_logprob_quality(
       partials. Floats appear only in reported values, never in join
       or selection keys (the libm/selection-key rule).
     """
-    from flink_anomaly_spark.operators.dedup import _persist
-
     # base feeds three consumers (unigram counts, the pairs frame, the
     # first-token scorer) and pairs two (model build, scoring join):
     # Spark dedupes identical exchange subtrees, not raw
     # scan+tokenize+explode subtrees, so without persistence one action
     # re-reads and re-tokenizes the corpus ~4x (the
-    # unigram_logprob_quality _persist convention)
-    base = _persist(
+    # unigram_logprob_quality resources.persist convention)
+    base = persist(
         spread(
             df.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
         ).filter(F.size("toks") >= 1)
@@ -830,7 +827,7 @@ def bigram_logprob_quality(
     toks_pos = base.select("id", F.explode("toks").alias("w"))
     uni = toks_pos.groupBy("w").agg(F.count("*").cast("bigint").alias("c"))
     tot = uni.agg(F.sum("c").cast("bigint").alias("n_corpus"))
-    pairs = _persist(
+    pairs = persist(
         base.filter(F.size("toks") >= 2)
         .select(
             "id",
@@ -943,8 +940,6 @@ def dsir_importance_weights(
     derive from it (vocabulary-sized); the scoring join is per-token;
     corpus totals are 1-row broadcasts. log2 on identical integer-
     derived doubles is cross-engine exact (the proven log2 path)."""
-    from flink_anomaly_spark.operators.dedup import _persist
-
     base = spread(
         df.select(
             F.col(id_col).alias("id"),
@@ -952,7 +947,7 @@ def dsir_importance_weights(
             F.col(text_col).alias("__x"),
         )
     )
-    g = _persist(
+    g = persist(
         base.select("id", "__t", F.explode(tokens(F.col("__x"))).alias("tk"))
         .groupBy("id", "__t", "tk")
         .agg(F.count("*").alias("c"))
@@ -1083,15 +1078,13 @@ def winnowing_dup_pairs(
     """
     from pyspark.sql import Window
 
-    from flink_anomaly_spark.operators.dedup import _persist
-
     # the fingerprint set feeds THREE consumers (per-doc sizes, the
     # posting-count window, and both sides of the postings self-join);
     # without a persist each branch would re-scan and re-hash the full
     # corpus — 4 scans of 100 TB instead of one. The persisted frame
     # carries only (id, n_grams, int64) rows, released between queries
-    # via dedup.release_cached (the bench/gate already call it).
-    fps = _persist(winnow_fingerprints(df, id_col=id_col, text_col=text_col, k=k, w=w))
+    # via resources.release_cached (the bench/gate already call it).
+    fps = persist(winnow_fingerprints(df, id_col=id_col, text_col=text_col, k=k, w=w))
     sizes = fps.groupBy(id_col).agg(F.count("*").alias("n_fp"))
     posting = F.count("*").over(Window.partitionBy("fp"))
     kept = fps.withColumn("__post", posting).filter(F.col("__post") <= max_postings)
@@ -1241,9 +1234,10 @@ def bpe_learn_merges(df: DataFrame, text_col: str = "text", n_merges: int = 3):
     everywhere, leftmost-greedy within each word.
 
     Returns ``(step, lhs, rhs, n)``: one row per learned merge with its
-    selection-time pair count, plus a final ``(n_merges+1, '<TOTAL>',
+    selection-time pair count, plus a final ``(len(merges)+1, '<TOTAL>',
     '<SYMBOLS>', Σ cnt·|symbols|)`` summary row proving the merged
-    state.
+    state. Training stops early when no symbol pair is left (an empty
+    corpus, or single-character words only).
 
     Scale shape: the corpus collapses to its VOCABULARY (distinct word,
     count) before any per-character work — pair counting and the merge
@@ -1261,7 +1255,7 @@ def bpe_learn_merges(df: DataFrame, text_col: str = "text", n_merges: int = 3):
         F.sum(F.col("cnt") * F.size(F.split("sym", r"\|"))).cast("bigint")
     ).collect()[0][0]
     vocab.unpersist()
-    rows = merges + [(n_merges + 1, "<TOTAL>", "<SYMBOLS>", int(total))]
+    rows = merges + [(len(merges) + 1, "<TOTAL>", "<SYMBOLS>", int(total or 0))]
     out = df.sparkSession.createDataFrame(rows, ["step", "lhs", "rhs", "n"])
     return out.select(
         F.col("step").cast("bigint"), "lhs", "rhs", F.col("n").cast("bigint")
@@ -1289,8 +1283,8 @@ def _bpe_vocab(df: DataFrame, text_col: str) -> DataFrame:
     '|'-delimited char symbols). The corpus collapses to its vocabulary
     before any per-character work — every training pass aggregates
     vocab rows, never corpus rows. Callers unpersist after their
-    terminal action."""
-    return (
+    terminal action; ``release_cached`` frees it on any other exit."""
+    return persist(
         spread(df.select(F.col(text_col).alias("__t")))
         .select(F.explode(tokens(F.col("__t"))).alias("w"))
         .groupBy("w")
@@ -1299,7 +1293,6 @@ def _bpe_vocab(df: DataFrame, text_col: str) -> DataFrame:
             "sym",
             F.expr("array_join(transform(sequence(1, length(w)), i -> substr(w, i, 1)), '|')"),
         )
-        .persist()
     )
 
 
@@ -1387,7 +1380,7 @@ def bpe_learn_merges_batched(
         F.sum(F.col("cnt") * F.size(F.split("sym", r"\|"))).cast("bigint")
     ).collect()[0][0]
     vocab.unpersist()
-    rows = merges + [(step + 1, pass_no, "<TOTAL>", "<SYMBOLS>", int(total))]
+    rows = merges + [(step + 1, pass_no, "<TOTAL>", "<SYMBOLS>", int(total or 0))]
     out = df.sparkSession.createDataFrame(rows, ["step", "pass", "lhs", "rhs", "n"])
     return out.select(
         F.col("step").cast("bigint"),
@@ -1400,8 +1393,10 @@ def bpe_learn_merges_batched(
 
 def _bpe_train(df: DataFrame, text_col: str, n_merges: int):
     """Shared BPE trainer: returns (persisted vocab frame, final
-    (w, cnt, sym) state, [(step, lhs, rhs, n)] merges). Callers MUST
-    unpersist the returned vocab after their terminal action.
+    (w, cnt, sym) state, [(step, lhs, rhs, n)] merges). Stops early
+    when no symbol pair is left, so ``merges`` may be shorter than
+    ``n_merges``. Callers unpersist the returned vocab after their
+    terminal action; ``release_cached`` frees it on any other exit.
 
     Cost: exactly ONE action per merge step (see BPE_MAX_MERGES);
     ``test_bpe_trainer_job_count`` pins that contract."""
@@ -1425,7 +1420,10 @@ def _bpe_train(df: DataFrame, text_col: str, n_merges: int):
             .groupBy(F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
             .agg(F.sum("cnt").cast("bigint").alias("n"))
         )
-        best = pc.orderBy(F.col("n").desc(), "lhs", "rhs").limit(1).collect()[0]
+        top = pc.orderBy(F.col("n").desc(), "lhs", "rhs").limit(1).collect()
+        if not top:
+            break  # every word is a single symbol — nothing left to learn
+        best = top[0]
         merges.append((step, best.lhs, best.rhs, int(best.n)))
         state = seg.withColumn(
             "sym", F.expr(_bpe_merge_fold_sql(best.lhs, best.rhs))
@@ -1568,12 +1566,11 @@ def unigram_lm_vocab(
     Output: one row per surviving piece — (piece, piece_len, usage)
     with usage from a final E-step against the pruned vocabulary.
     """
-    words = (
+    words = persist(
         spread(df.select(F.col(text_col).alias("__t")))
         .select(F.explode(tokens(F.col("__t"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .persist()
     )
     subs = (
         f"flatten(transform(sequence(2, {UNIGRAM_MAX_PIECE}), "

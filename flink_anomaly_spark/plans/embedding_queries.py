@@ -11,6 +11,8 @@ error folds are SEQUENTIAL left folds on both engines
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_anomaly_spark.operators.similarity import (
@@ -19,6 +21,7 @@ from flink_anomaly_spark.operators.similarity import (
     int8_quantize,
 )
 from flink_anomaly_spark.plans.registry import register
+from flink_anomaly_spark.resources import file_memo
 from flink_anomaly_spark.tables import load_table
 
 _UNNESTED = (
@@ -74,12 +77,6 @@ def _quantize_oracle() -> str:
     """
 
 
-#: quantizer 'index build' cache — per-dim (min, max), keyed by
-#: (path, mtime, size) of embeddings.parquet exactly like the IVF
-#: centroid cache, so a testdata regeneration invalidates it.
-_MINMAX_CACHE: dict[tuple[str, int, int], tuple[list[float], list[float]]] = {}
-
-
 @register(
     "embedding_int8_quantize",
     oracle=_quantize_oracle(),
@@ -89,14 +86,13 @@ _MINMAX_CACHE: dict[tuple[str, int, int], tuple[list[float], list[float]]] = {}
     "error, bit-identical to the oracle's list_reduce.",
 )
 def q_embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_anomaly_spark.plans.relational_ext import _ivf_cache_key
-
     emb = load_table(spark, sf_dir, "embeddings")
-    key = _ivf_cache_key(sf_dir)
-    if key not in _MINMAX_CACHE:
-        _MINMAX_CACHE.clear()
-        _MINMAX_CACHE[key] = collect_dim_minmax(emb, "embedding")
-    mins, maxs = _MINMAX_CACHE[key]
+    # the quantizer's 'index build', reused per corpus like the IVF centroids
+    mins, maxs = file_memo(
+        "dim_minmax",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        lambda: collect_dim_minmax(emb, "embedding"),
+    )
     return int8_quantize(emb, id_col="vec_id", vec_col="embedding", mins=mins, maxs=maxs)
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from flink_anomaly_spark.plans.fragments import TOKS
 from flink_anomaly_spark.plans.registry import register
+from flink_anomaly_spark.resources import persist
 from flink_anomaly_spark.tables import load_table
 
 
@@ -1379,10 +1380,9 @@ def q_snm_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least("id_a", "id_b").alias("id_a"),
         F.greatest("id_a", "id_b").alias("id_b"),
     )
-    from flink_anomaly_spark.operators.dedup import _persist
 
-    truth = _persist(truth)
-    snm = _persist(snm)
+    truth = persist(truth)
+    snm = persist(snm)
     n_truth = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
     n_snm = snm.agg(F.count("*").cast("bigint").alias("n_snm_verified"))
     n_common = truth.join(snm, ["id_a", "id_b"]).agg(

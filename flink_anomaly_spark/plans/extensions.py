@@ -26,6 +26,7 @@ from flink_anomaly_spark.operators.similarity import brute_force_topk
 from flink_anomaly_spark.partitioning import spread
 from flink_anomaly_spark.operators.text import text_profile
 from flink_anomaly_spark.plans.registry import register
+from flink_anomaly_spark.resources import persist
 from flink_anomaly_spark.tables import load_table
 
 # shared DuckDB fragments (plans/fragments.py) -------------------------------
@@ -1301,14 +1302,13 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count trio (triangles/edges/nodes) rides one plan.",
 )
 def q_neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_anomaly_spark.operators.dedup import _persist
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_near_dup_pairs(
         docs, id_col="doc_id", text_col="text", k_shingle=3,
         num_perm=_NUM_PERM, bands=_BANDS, jaccard_threshold=0.5,
     )
-    e = _persist(pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b")))
+    e = persist(pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b")))
     tri = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1.b") == F.col("e2.a"))

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_anomaly_spark.plans.registry import register
+from flink_anomaly_spark.resources import persist
 from flink_anomaly_spark.streaming.pipelines import (
     run_to_memory,
     stream_events,
@@ -1088,7 +1089,6 @@ def q_streaming_robust_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from flink_anomaly_spark.operators.anomaly import CONFORMAL_SPLIT_TS
-    from flink_anomaly_spark.operators.dedup import _persist
     from flink_anomaly_spark.operators.mining import (
         _daily_units,
         hodges_lehmann_from_daily,
@@ -1113,7 +1113,7 @@ def q_streaming_robust_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     calib = load_table(spark, sf_dir, "events").filter(F.col("ts") < split)
     # one calibration scan + (key, day) agg feeds both frozen estimators
-    calib_daily = _persist(_daily_units(calib, "event_type", "ts", "value"))
+    calib_daily = persist(_daily_units(calib, "event_type", "ts", "value"))
     hl = hodges_lehmann_from_daily(calib_daily).select(
         "__k", F.col("hl_location").alias("__hl")
     )

@@ -58,14 +58,9 @@ def stream_state_partitions(spark: SparkSession) -> int | None:
     for streaming: stateful operators pin their partitioning at first
     checkpoint, so the count must be right at query start.
 
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides (production deployments
-    size state partitions to PEAK throughput, not current file size).
     Returns None when no streaming source has been built yet (callers
     leave the session conf untouched).
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return max(1, int(env))
     if _STREAM_SOURCE_BYTES is None:
         return None
     want = -(-_STREAM_SOURCE_BYTES // _STATE_PARTITION_TARGET_BYTES)  # ceil
@@ -98,28 +93,39 @@ def _events_ts_schema(sf_dir: str) -> tuple[T.StructType, bool]:
     return schema, nanos
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unbounded streaming DataFrame over the events table (file-stream
-    source — each parquet file is a micro-batch input split).
-    """
-    schema, nanos = _events_ts_schema(sf_dir)
+def _events_source(
+    spark: SparkSession,
+    sf_dir: str,
+    reader_dir: str,
+    glob: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-stream reader over ``glob`` in ``reader_dir`` with the events
+    schema of ``sf_dir``, ``ts`` as TIMESTAMP — the tail shared by the
+    events stream sources. Records the events file's size for
+    :func:`stream_state_partitions`."""
     global _STREAM_SOURCE_BYTES
+    schema, nanos = _events_ts_schema(sf_dir)
     _STREAM_SOURCE_BYTES = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # watermarks demand TIMESTAMP (not NTZ); with the session TZ pinned
     # to UTC the NTZ→LTZ cast is an exact epoch mapping
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    raw = reader.parquet(reader_dir)
     if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unbounded streaming DataFrame over the events table (file-stream
+    source — each parquet file is a micro-batch input split).
+    """
+    return _events_source(spark, sf_dir, sf_dir, "events.parquet")
 
 
 def windowed_count_stream(events: DataFrame, duration: str = "1 day") -> DataFrame:
@@ -518,7 +524,7 @@ def stream_events_with_final_flush(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    schema, nanos = _events_ts_schema(sf_dir)
+    _, nanos = _events_ts_schema(sf_dir)
     os.makedirs(work_dir, exist_ok=True)
     link = os.path.join(work_dir, "events.parquet")
     if not os.path.lexists(link):
@@ -560,26 +566,13 @@ def stream_events_with_final_flush(
         "stream's mtime order"
     )
 
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    global _STREAM_SOURCE_BYTES
-    _STREAM_SOURCE_BYTES = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", "*.parquet")
-    if max_files_per_trigger is not None:
-        # multi-batch replay: real data and the sentinel land in
-        # SEPARATE micro-batches (FileStreamSource orders by mtime and
-        # the sentinel's mtime is forced newest above), proving the flush
-        # doesn't depend on single-batch processing — the watermark
-        # simply advances batch by batch and the final batch emits the
-        # remaining windows, exactly like a live source reaching EOS
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.parquet(work_dir)
-    if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    # with max_files_per_trigger, a multi-batch replay: real data and
+    # the sentinel land in SEPARATE micro-batches (FileStreamSource
+    # orders by mtime and the sentinel's mtime is forced newest above),
+    # proving the flush doesn't depend on single-batch processing — the
+    # watermark simply advances batch by batch and the final batch
+    # emits the remaining windows, exactly like a live source reaching EOS
+    return _events_source(spark, sf_dir, work_dir, "*.parquet", max_files_per_trigger)
 
 
 def stream_events_multi_batch(
@@ -601,7 +594,6 @@ def stream_events_multi_batch(
     oracle)."""
     import pyarrow.parquet as pq2
 
-    schema, nanos = _events_ts_schema(sf_dir)
     os.makedirs(work_dir, exist_ok=True)
     marker = os.path.join(work_dir, ".chunks_ready")
     if not os.path.exists(marker):
@@ -622,22 +614,7 @@ def stream_events_multi_batch(
         with open(marker, "w") as fh:
             fh.write(str(n_chunks))
 
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    global _STREAM_SOURCE_BYTES
-    _STREAM_SOURCE_BYTES = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "chunk_*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(work_dir)
-    )
-    if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return _events_source(spark, sf_dir, work_dir, "chunk_*.parquet", 1)
 
 
 import contextlib

@@ -117,3 +117,50 @@ def test_docs_name_existing_paths():
         if not (root / path).exists()
     ]
     assert not missing, "docs name paths that do not exist:\n" + "\n".join(missing)
+
+
+def test_cache_lifecycle_lives_in_resources():
+    """Persisted frames, lineage checkpoints and driver memos have one
+    owner, ``flink_anomaly_spark/resources.py``: no other package module
+    calls ``.persist(``, ``.localCheckpoint(`` or ``.checkpoint(`` (the
+    one exception is the foreachBatch router in sinks.py, which
+    unpersists its micro-batch in the same call), imports a private
+    name from ``operators.dedup``, or imports from ``resources`` inside
+    a function body; ``resources.py`` imports nothing from the package."""
+    import ast
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    owner = "flink_anomaly_spark/resources.py"
+    allowed = {("flink_anomaly_spark/sinks.py", "batch_df", "persist")}
+    offenders = []
+    for f in sorted(root.glob("flink_anomaly_spark/**/*.py")):
+        rel = f.relative_to(root).as_posix()
+        tree = ast.parse(f.read_text(encoding="utf-8"))
+        top_level = {id(node) for node in tree.body}
+        for node in ast.walk(tree):
+            where = f"{rel}:{getattr(node, 'lineno', 0)}"
+            if rel == owner:
+                if isinstance(node, ast.ImportFrom) and (
+                    node.level or (node.module or "").startswith("flink_anomaly_spark")
+                ):
+                    offenders.append(f"{where}: resources imports from the package")
+                continue
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "localCheckpoint", "checkpoint")
+            ):
+                receiver = getattr(node.func.value, "id", None)
+                if (rel, receiver, node.func.attr) not in allowed:
+                    offenders.append(f"{where}: .{node.func.attr}( outside resources")
+            if isinstance(node, ast.ImportFrom):
+                if node.module == "flink_anomaly_spark.operators.dedup":
+                    offenders += [
+                        f"{where}: imports dedup.{a.name}"
+                        for a in node.names
+                        if a.name.startswith("_")
+                    ]
+                if node.module == "flink_anomaly_spark.resources" and id(node) not in top_level:
+                    offenders.append(f"{where}: imports resources inside a function")
+    assert not offenders, "\n".join(offenders)

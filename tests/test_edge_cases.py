@@ -181,7 +181,8 @@ def test_interval_self_join_pre_1970_timestamps(spark):
 
 
 def test_release_cached_unpersists_dedup_intermediates(spark):
-    from flink_anomaly_spark.operators.dedup import minhash_near_dup_pairs, release_cached
+    from flink_anomaly_spark.operators.dedup import minhash_near_dup_pairs
+    from flink_anomaly_spark.resources import release_cached
 
     df = spark.createDataFrame(
         [(i, f"w{i} common text body shared") for i in range(20)], "id long, text string"

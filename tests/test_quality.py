@@ -3,6 +3,8 @@ filter, repetition profile, stratified sampling)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from flink_anomaly_spark.operators.text import (
@@ -435,6 +437,40 @@ def test_bpe_merge_tie_break_lexicographic(spark):
     df = spark.createDataFrame([(1, "zy ba")], ["doc_id", "text"])
     out = [tuple(r) for r in bpe_learn_merges(df, n_merges=1).collect()]
     assert out[0] == (1, "b", "a", 1)
+
+
+@pytest.mark.parametrize(
+    "texts, symbols", [([], 0), (["a b c"], 3)], ids=["empty", "one_char_words"]
+)
+def test_bpe_no_symbol_pair_stops_and_releases(spark, texts, symbols):
+    """A corpus with no adjacent symbol pair (empty, or one-character
+    words only) learns no merge: the trainer stops instead of indexing
+    an empty argmax, reports only the <TOTAL> row, and leaves nothing
+    cached — also when the caller fails after training."""
+    from flink_anomaly_spark.operators.text import (
+        bpe_fertility_by_lang,
+        bpe_learn_merges,
+        bpe_learn_merges_batched,
+    )
+    from flink_anomaly_spark.resources import release_cached
+
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    release_cached()
+    spark.catalog.clearCache()
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    out = [tuple(r) for r in bpe_learn_merges(df, n_merges=3).collect()]
+    assert out == [(1, "<TOTAL>", "<SYMBOLS>", symbols)]
+    assert cache_empty()
+    batched = [tuple(r) for r in bpe_learn_merges_batched(df, n_merges=3).collect()]
+    assert batched == [(1, 1, "<TOTAL>", "<SYMBOLS>", symbols)]
+    assert cache_empty()
+    # the trainer's persisted vocab is released on an error exit too
+    with pytest.raises(AnalysisException):
+        bpe_fertility_by_lang(df, lang_col="no_such_column", n_merges=3)
+    assert release_cached() == 3  # the three trainings' vocab frames
+    assert cache_empty()
 
 
 def test_bpe_fertility_hand_computed(spark):

@@ -1,7 +1,7 @@
 """Round-13 optimization tests.
 
 Covers the streaming state-partition sizing (measured in commit a897cb8): the
-formula's clamps and override, and — the part that guards the bench's
+formula's clamps, and — the part that guards the bench's
 integrity — that the shared runners RESTORE the session's shuffle
 partitions after the streaming query drains, so later batch queries in
 the same session never silently inherit a streaming-sized value.
@@ -20,7 +20,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 
 def test_state_partitions_formula_clamps(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
     par = spark.sparkContext.defaultParallelism
     # no source built yet -> None (session conf untouched)
     monkeypatch.setattr(P, "_STREAM_SOURCE_BYTES", None)
@@ -39,12 +38,6 @@ def test_state_partitions_formula_clamps(spark, monkeypatch):
         P, "_STREAM_SOURCE_BYTES", 5 * P._STATE_PARTITION_TARGET_BYTES + 1
     )
     assert P.stream_state_partitions(spark) == max(4, min(par, 6))
-
-
-def test_state_partitions_env_override(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "13")
-    monkeypatch.setattr(P, "_STREAM_SOURCE_BYTES", None)
-    assert P.stream_state_partitions(spark) == 13
 
 
 def test_source_builders_record_bytes(spark, tmp_path):
@@ -140,7 +133,7 @@ def test_streaming_result_identical_across_partition_counts(spark, monkeypatch):
     plan = P.windowed_count_stream(events)
 
     def rows(n):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", str(n))
+        monkeypatch.setattr(P, "stream_state_partitions", lambda _spark: n)
         return sorted(
             map(tuple, P.run_to_memory(plan).collect()),
             key=lambda t: (str(t[0]), str(t[2])),

@@ -16,6 +16,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
+from flink_anomaly_spark.resources import release_cached
 from flink_anomaly_spark.session import get_spark
 from flink_anomaly_spark.tables import TABLE_NAMES
 
@@ -118,8 +119,6 @@ def main() -> int:
     if unknown:
         print(f"ERROR: unknown query name(s): {unknown}")
         return 2
-    from flink_anomaly_spark.operators.dedup import release_cached
-
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
