@@ -22,7 +22,13 @@ def register_builtin_udfs(spark: SparkSession) -> None:
     Kept deliberately small: everything expressible as a built-in
     Column expression stays one (codegen > UDF); only genuinely custom
     computations are registered.
+
+    Once per session: a session that already has
+    ``engine_quality_score`` (registered last) keeps its functions, so
+    repeated ``sql()`` calls do not re-pickle and replace them.
     """
+    if spark.catalog.functionExists("engine_quality_score"):
+        return
     from flink_anomaly_spark.operators.dedup import simhash60_pandas
 
     spark.udf.register("engine_simhash60", simhash60_pandas())

@@ -7,8 +7,9 @@ The engine's three kinds of query-spanning state live here, each once:
   queries;
 - :func:`truncator` — the lineage-truncation strategy of the iterative
   graph algorithms (``localCheckpoint`` or reliable ``checkpoint``);
-- :func:`file_memo` — driver-side "index build" values (IVF centroids,
-  quantizer bounds) reused while their source file is unchanged.
+- :func:`file_memo` — driver-side values (the catalog's parquet
+  schemas, IVF centroids, quantizer bounds) reused while their source
+  file is unchanged.
 
 This module imports nothing from the package, so any module can import
 it at the top.
@@ -36,6 +37,11 @@ T = TypeVar("T")
 _PERSISTED: list[DataFrame] = []
 
 
+#: Set by every :func:`truncator` checkpoint, cleared by
+#: :func:`release_cached`, which collects garbage only when it is set.
+_CHECKPOINTED = False
+
+
 def persist(df: DataFrame) -> DataFrame:
     df.persist()
     _PERSISTED.append(df)
@@ -45,29 +51,37 @@ def persist(df: DataFrame) -> DataFrame:
 def release_cached() -> int:
     """Unpersist every cached intermediate created through :func:`persist`.
 
-    Returns the number of DataFrames released. Safe to call at any time:
-    a consumer that re-scans a released plan recomputes it (correctness
-    is unaffected, only the branch-sharing speedup).
+    Returns the number of DataFrames that were still cached; frames the
+    caller already unpersisted are unpersisted again but not counted.
+    Safe to call at any time: a consumer that re-scans a released plan
+    recomputes it (correctness is unaffected, only the branch-sharing
+    speedup).
 
-    Also runs a Python ``gc.collect()``: ``localCheckpoint`` blocks (the
-    CC/pagerank/kcore lineage truncation) are only dropped by Spark's
-    ContextCleaner once the DRIVER-side RDD reference is garbage-
-    collected, and CPython's cyclic collector lags the query loop — a
-    many-query session accumulated 10-20 live checkpoint RDD block sets
-    and the checkpoint-heavy queries degraded 15-60 % vs a fresh
-    session. With the explicit collect the stored-RDD count stays at
-    the per-query working set (5-10) and in-loop times match fresh-
-    session probes (measured in commit a897cb8; collect cost is ~10 ms,
-    outside every timed region)."""
+    Runs a Python ``gc.collect()`` only when a :func:`truncator`
+    checkpoint was taken since the last release. ``localCheckpoint``
+    blocks (the CC/pagerank/kcore/BFS/dedup-cluster lineage truncation)
+    are only dropped by Spark's ContextCleaner once the DRIVER-side RDD
+    reference is garbage-collected, and CPython's cyclic collector lags
+    the query loop — a many-query session accumulated 10-20 live
+    checkpoint RDD block sets and the checkpoint-heavy queries degraded
+    15-60 % vs a fresh session. With the collect the stored-RDD count
+    stays at the per-query working set (5-10) and in-loop times match
+    fresh-session probes (measured in commit a897cb8). A query that took
+    no checkpoint has nothing for the collect to free, so it skips the
+    collect's ~70 ms."""
+    global _CHECKPOINTED
     n = 0
     while _PERSISTED:
         df = _PERSISTED.pop()
         try:
+            if df.is_cached:
+                n += 1
             df.unpersist()
-            n += 1
         except Exception:
             pass  # session already stopped — nothing to release
-    gc.collect()
+    if _CHECKPOINTED:
+        _CHECKPOINTED = False
+        gc.collect()
     return n
 
 
@@ -89,12 +103,12 @@ def truncator(df: DataFrame, reliable_checkpoint_dir: str | None):
     if reliable_checkpoint_dir is not None:
         df.sparkSession.sparkContext.setCheckpointDir(reliable_checkpoint_dir)
 
-        def _truncate(frame: DataFrame) -> DataFrame:
+    def _truncate(frame: DataFrame) -> DataFrame:
+        global _CHECKPOINTED
+        _CHECKPOINTED = True
+        if reliable_checkpoint_dir is not None:
             return frame.checkpoint(eager=True)
-    else:
-
-        def _truncate(frame: DataFrame) -> DataFrame:
-            return frame.localCheckpoint(eager=True)
+        return frame.localCheckpoint(eager=True)
 
     return _truncate
 

@@ -164,3 +164,50 @@ def test_cache_lifecycle_lives_in_resources():
                 if node.module == "flink_anomaly_spark.resources" and id(node) not in top_level:
                     offenders.append(f"{where}: imports resources inside a function")
     assert not offenders, "\n".join(offenders)
+
+
+def test_catalog_reads_and_collects_have_one_owner():
+    """Every catalog load goes through ``tables.load_table`` and its
+    schema memo: no module under ``flink_anomaly_spark/plans/`` or
+    ``operators/`` calls ``.parquet(`` on a reader (or reads
+    ``format("parquet")``). ``gc.collect`` is called only in
+    ``resources.py``, where ``release_cached`` runs it after a
+    checkpoint."""
+    import ast
+    from pathlib import Path
+
+    def chain(node):
+        """Attribute names and call args along a method chain's receiver."""
+        names, args = [], []
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Call):
+                args += [a.value for a in node.args if isinstance(a, ast.Constant)]
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names, args
+
+    root = Path(entrymod.__file__).resolve().parent
+    read_scoped = ("flink_anomaly_spark/plans/", "flink_anomaly_spark/operators/")
+    offenders = []
+    for f in sorted(root.glob("flink_anomaly_spark/**/*.py")):
+        rel = f.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(f.read_text(encoding="utf-8"))):
+            where = f"{rel}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.ImportFrom) and node.module == "gc":
+                offenders.append(f"{where}: imports from gc")
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            names, args = chain(node.func.value)
+            if node.func.attr == "collect" and names == [] and getattr(
+                node.func.value, "id", None
+            ) == "gc" and rel != "flink_anomaly_spark/resources.py":
+                offenders.append(f"{where}: gc.collect outside resources")
+            if not rel.startswith(read_scoped) or {"write", "writeStream"} & set(names):
+                continue
+            if node.func.attr == "parquet":
+                offenders.append(f"{where}: .parquet( read outside tables.load_table")
+            if node.func.attr in ("load", "table") and "parquet" in args:
+                offenders.append(f"{where}: format('parquet') read outside tables.load_table")
+    assert not offenders, "\n".join(offenders)

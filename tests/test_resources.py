@@ -1,9 +1,13 @@
-"""Spark-free tests of ``resources.file_memo``, the file-keyed driver
-memo behind the IVF centroid and quantizer-bounds index builds."""
+"""Spark-free tests of ``resources``: ``file_memo``, the file-keyed
+driver memo behind the parquet schema catalog and the IVF centroid and
+quantizer-bounds index builds, and ``release_cached``'s counting and
+its garbage collection after a ``truncator`` checkpoint."""
 
 from __future__ import annotations
 
+import gc
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -74,3 +78,59 @@ def test_failed_stat_computes_without_caching(tmp_path):
     assert resources.file_memo("t", missing, compute) == 1
     assert resources.file_memo("t", missing, compute) == 2
     assert resources._FILE_MEMO == {}
+
+
+@pytest.fixture
+def collects(monkeypatch):
+    """Counts ``gc.collect`` calls; starts with no tracked frame and no
+    checkpoint taken."""
+    monkeypatch.setattr(resources, "_PERSISTED", [])
+    resources.release_cached()  # clears a checkpoint record left by other tests
+    calls = []
+    monkeypatch.setattr(gc, "collect", lambda: calls.append(1) or 0)
+    return calls
+
+
+def _stub_frame():
+    ctx = SimpleNamespace(setCheckpointDir=lambda path: None)
+    return SimpleNamespace(
+        localCheckpoint=lambda eager: "local",
+        checkpoint=lambda eager: "reliable",
+        sparkSession=SimpleNamespace(sparkContext=ctx),
+    )
+
+
+def test_release_without_checkpoint_does_not_collect(collects):
+    assert resources.release_cached() == 0
+    assert resources.release_cached() == 0
+    assert collects == []
+
+
+@pytest.mark.parametrize(
+    "checkpoint_dir, taken", [(None, "local"), ("/tmp/ckpt", "reliable")], ids=["local", "reliable"]
+)
+def test_checkpoint_makes_the_next_release_collect_once(collects, checkpoint_dir, taken):
+    frame = _stub_frame()
+    assert resources.truncator(frame, checkpoint_dir)(frame) == taken
+    resources.release_cached()
+    assert len(collects) == 1
+    resources.release_cached()
+    assert len(collects) == 1
+
+
+class _Tracked:
+    def __init__(self, is_cached):
+        self.is_cached = is_cached
+        self.unpersists = 0
+
+    def unpersist(self):
+        self.is_cached = False
+        self.unpersists += 1
+
+
+def test_release_counts_only_frames_still_cached(collects):
+    frames = [_Tracked(True), _Tracked(False), _Tracked(True)]
+    resources._PERSISTED.extend(frames)
+    assert resources.release_cached() == 2
+    assert [f.unpersists for f in frames] == [1, 1, 1]
+    assert resources._PERSISTED == []

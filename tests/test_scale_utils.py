@@ -168,6 +168,30 @@ def test_sql_text_interface(spark):
     assert all(r.h is not None for r in rows)
 
 
+def test_sql_registers_udfs_once_per_session(spark, monkeypatch):
+    """``sql()`` registers the engine UDFs once per session: a second
+    call leaves them registered as they are, and a new session, which
+    does not see the first one's functions, registers its own."""
+    from pyspark.sql.udf import UDFRegistration
+
+    sql(spark, SF_SMOKE, "SELECT 1")
+    registered = []
+    real = UDFRegistration.register
+
+    def counting(self, name, f, *args, **kwargs):
+        registered.append(name)
+        return real(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "register", counting)
+    sql(spark, SF_SMOKE, "SELECT 1")
+    assert registered == []
+    fresh = spark.newSession()
+    assert not fresh.catalog.functionExists("engine_quality_score")
+    out = sql(fresh, SF_SMOKE, "SELECT engine_quality_score('the cat sat') AS q").collect()
+    assert registered == ["engine_simhash60", "engine_quality_score"]
+    assert out[0].q is not None
+
+
 def test_grouped_udaf_weighted_mean(spark):
     import warnings
 

@@ -350,3 +350,74 @@ def test_wap_time_travel_and_rollback(spark, tmp_path):
     frame = spark.range(0, 50).select(F.col("id"), F.lit("v5").alias("tag"))
     write_audit_publish(frame, final, ok)
     assert len(list_table_versions(final)) == 1
+
+
+def _load_in_own_group(spark, sf_dir, name):
+    """``load_table`` in its own job group: (frame, jobs it ran)."""
+    import uuid
+
+    group = f"load_table.{name}.{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_each_schema_once(spark, monkeypatch):
+    """A table file's parquet schema is inferred on its first load only:
+    the second load of each catalog table runs no Spark job and has the
+    schema a from-scratch inference gives."""
+    from flink_anomaly_spark import resources
+    from flink_anomaly_spark.tables import TABLE_NAMES
+
+    monkeypatch.setattr(resources, "_FILE_MEMO", {})
+    first = {name: _load_in_own_group(spark, SF_SMOKE, name) for name in TABLE_NAMES}
+    assert all(jobs >= 1 for _, jobs in first.values())
+    for name in TABLE_NAMES:
+        df, jobs = _load_in_own_group(spark, SF_SMOKE, name)
+        assert jobs == 0, name
+        assert df.schema == first[name][0].schema, name
+
+
+def test_load_table_reinfers_a_rewritten_file(spark, tmp_path):
+    """The schema memo keys on the file's identity: rewriting a table
+    file with another column set makes the next load infer again and
+    return the new schema and rows."""
+    import shutil
+
+    import duckdb
+
+    path = tmp_path / "region.parquet"
+    shutil.copy(os.path.join(SF_SMOKE, "region.parquet"), path)
+    old_columns = load_table(spark, str(tmp_path), "region").columns
+    assert load_table(spark, str(tmp_path), "region").columns == old_columns
+    duckdb.sql(f"COPY (SELECT 7::BIGINT AS r_id, 'x' AS r_label) TO '{path}' (FORMAT PARQUET)")
+    df, jobs = _load_in_own_group(spark, str(tmp_path), "region")
+    assert jobs >= 1
+    assert df.columns == ["r_id", "r_label"] != old_columns
+    assert [tuple(r) for r in df.collect()] == [(7, "x")]
+    df, jobs = _load_in_own_group(spark, str(tmp_path), "region")
+    assert (jobs, df.columns) == (0, ["r_id", "r_label"])
+
+
+def test_events_ts_in_a_new_session(spark, duck):
+    """A fresh session (no ``nanosAsLong``, default time zone) reads
+    ``events`` with the memoized schema, runs no inference job, and
+    gets ``ts`` with the tuned session's timestamp type and the oracle's
+    values."""
+    ts_type = dict(load_table(spark, SF_SMOKE, "events").dtypes)["ts"]
+    assert ts_type.startswith("timestamp")
+    fresh = spark.newSession()
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "false"
+    df, jobs = _load_in_own_group(fresh, SF_SMOKE, "events")
+    assert jobs == 0
+    assert dict(df.dtypes)["ts"] == ts_type
+    # the NTZ -> LTZ cast reads the wall clock in the pinned UTC zone
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    got = sorted(tuple(r) for r in df.select("event_id", micros).collect())
+    want = sorted(duck.execute("SELECT event_id, epoch_us(ts) FROM events").fetchall())
+    assert got == want and len(got) > 0
