@@ -34,6 +34,18 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(par)
 
 
+def _row_salt(df: DataFrame, n_salts: int):
+    """Salt in ``[0, n_salts)`` derived from the row's content, not a
+    random draw: a retried task recomputes the same salt for the same
+    row, so the salted stage stays deterministic and a fetch failure
+    re-runs only the lost tasks, not the whole stage.
+
+    The hash covers every column of ``df``, so a hot key spreads only
+    as far as its rows differ beyond the key: rows identical in all
+    columns (a frame holding only the key) all get one salt."""
+    return F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)).cast("int")
+
+
 def salted_group_agg(
     df: DataFrame,
     key: str,
@@ -45,12 +57,14 @@ def salted_group_agg(
     Phase 1 groups on (key, salt) — the hot key's rows spread across
     ``n_salts`` reducers; phase 2 merges the partials per key. Only
     algebraic aggregates (sum/count/min/max) are supported — exactly the
-    set that re-aggregates losslessly.
+    set that re-aggregates losslessly. The salt is a hash of the whole
+    row (``_row_salt``), so the spread needs rows that differ beyond
+    ``key``.
 
     ``agg_exprs``: {output_col: "sum(col)" | "count(*)" | "min(col)" |
     "max(col)"}.
     """
-    salt = (F.rand(seed=42) * n_salts).cast("int").alias("__salt")
+    salt = _row_salt(df, n_salts)
     phase1_aggs, phase2_aggs = [], []
     for out, expr in agg_exprs.items():
         fn, _, arg = expr.partition("(")
@@ -89,11 +103,12 @@ def salted_join_hot_keys(
     """Manual skew-join salting (for engines/paths where AQE skew
     handling is unavailable, e.g. some streaming joins): explode the dim
     side's hot keys into n_salts replicas, salt the fact side's hot
-    rows, equi-join on (key, salt).
+    rows from a hash of their content (``_row_salt``; the spread needs
+    fact rows that differ beyond ``key``), equi-join on (key, salt).
     """
     hot = F.col(key).isin(hot_keys)
     fact_salted = fact.withColumn(
-        "__salt", F.when(hot, (F.rand(seed=42) * n_salts).cast("int")).otherwise(F.lit(0))
+        "__salt", F.when(hot, _row_salt(fact, n_salts)).otherwise(F.lit(0))
     )
     dim_salted = dim.withColumn(
         "__salt",

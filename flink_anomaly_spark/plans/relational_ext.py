@@ -714,9 +714,9 @@ def q_funnel_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Manual skew-join salting (partitioning.salted_join_hot_keys): "
     "the dim side's hot keys explode into n_salts replicas, the fact "
-    "side's hot rows salt randomly, the join runs on (key, salt) — so "
-    "one pathological key spreads over n_salts reducers instead of "
-    "stalling one. Salting is RESULT-invariant, hence the plain-join "
+    "side's hot rows are salted from a hash of their content, the join "
+    "runs on (key, salt) — so one pathological key spreads over "
+    "n_salts reducers instead of stalling one. Salting is RESULT-invariant, hence the plain-join "
     "oracle; the streaming-join path needs this because AQE skew "
     "handling is batch-only.",
 )

@@ -22,6 +22,17 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set,
+    else a quarter of physical memory capped at 16g, so a second Spark
+    process (an oracle gate beside the tests) still fits on the host."""
+    configured = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if configured:
+        return configured
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(physical // 4, 16 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "flink_anomaly_spark",
     cpus: int | None = None,
@@ -51,7 +62,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
     )

@@ -5,12 +5,12 @@
   text/parquet writers; rolling ≈ trigger interval + maxRecordsPerFile;
 - K3 custom ``RichSinkFunction`` → ``foreachBatch`` (the Spark place
   for side-effecting sinks; documented at-least-once, see
-  streaming/recovery.py).
+  ``streaming.recovery.count_foreach_side_effects``). The one
+  exactly-once path is Spark's transactional file sink
+  (``streaming.recovery.run_file_sink_with_restarts``).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 
@@ -28,7 +28,6 @@ def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
     compression: str | None = None,
     max_records_per_file: int | None = None,
 ) -> None:
@@ -42,7 +41,7 @@ def write_parquet(
     (the batch analog of the streaming rolling policy) so a skewed
     partition can't produce one multi-GB file that serializes a
     downstream task."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if compression is not None:
@@ -81,209 +80,3 @@ def sink_split_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def sink_foreach_batch(df: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint: str):
-    """K3: custom side-effecting sink via foreachBatch
-    (TestFlinkStreamsRecover.java:99-107's ConcatenateSink analog).
-    At-least-once: a crashed batch replays its effects."""
-    return (
-        df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def sink_foreach_batch_idempotent(
-    df: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint: str, ledger_dir: str
-):
-    """Exactly-once-effect variant of :func:`sink_foreach_batch`: the
-    standard production batchId-ledger pattern. foreachBatch re-invokes
-    a crashed batch with the SAME batchId on restart — recording each
-    completed batchId durably (one marker file, written after ``fn``
-    returns) and skipping already-recorded ids makes the side effect
-    idempotent, which upgrades the at-least-once foreach path to
-    exactly-once EFFECTS (Spark's own guarantee upgrade recipe; the
-    marker write itself must be atomic, which a file create is).
-    """
-    import os
-
-    os.makedirs(ledger_dir, exist_ok=True)
-
-    def wrapper(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger_dir, f"batch-{batch_id}.done")
-        if os.path.exists(marker):
-            return  # replayed batch: effects already applied
-        fn(batch_df, batch_id)
-        with open(marker, "w") as f:
-            f.write("done")
-
-    return (
-        df.writeStream.foreachBatch(wrapper)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def write_audit_publish(
-    df: DataFrame,
-    final_path: str,
-    audits: list[Callable[[DataFrame], tuple[str, bool]]],
-    staging_suffix: str = "._staging",
-    keep_versions: int = 0,
-) -> list[tuple[str, bool]]:
-    """Write-audit-publish: the batch sink pattern a production lake
-    uses so a bad batch never becomes visible (popularized by Netflix's
-    Iceberg WAP workflow; works on plain parquet directories too).
-
-    1. WRITE the frame to ``final_path + staging_suffix``;
-    2. AUDIT the staged files by re-reading them (so the checks see
-       exactly the bytes readers would) through each audit callable,
-       which returns ``(check_name, passed)``;
-    3. PUBLISH via a versioned-directory + atomic pointer swap iff
-       every audit passed: the staged data is renamed to a fresh
-       ``final_path.v-<id>`` directory and ``final_path`` becomes a
-       symlink that is swapped with ``os.replace`` (a single atomic
-       rename(2)). Readers resolving ``final_path`` therefore see
-       either the complete old version or the complete new one — never
-       a missing or partial table. A crash at ANY point is safe: the
-       pointer still targets the old version and the new data sits
-       intact in its version directory (re-running the publish is
-       idempotent-safe). The previous version directory is removed only
-       AFTER the swap succeeds. On audit failure the staging dir is
-       left in place for inspection and nothing is promoted.
-
-    (The earlier rmtree-then-rename implementation had a window where
-    no table existed and lost the published table if the process died
-    between the two calls — round-4 ADVICE fix. Round-5 ADVICE fix:
-    a legacy plain directory is migrated to the versioned layout
-    up-front — demote + immediately re-link — and a crash inside that
-    one-time migration is recovered on the next call: a missing
-    ``final_path`` with orphan ``.v-`` siblings gets its pointer
-    restored to the newest intact version before anything else runs,
-    so the "readers never see a missing table" claim holds across
-    re-runs even for the migration window.)
-
-    Returns the audit results. At 100 TB the pattern is identical —
-    the version-dir + pointer swap is exactly Iceberg/Delta's
-    manifest-pointer commit, expressed on a filesystem; on object
-    stores without rename the pointer is a catalog entry, same three
-    phases.
-
-    ``keep_versions`` (round 5) retains that many SUPERSEDED version
-    directories after each publish — the snapshot-retention half of
-    the lakehouse pattern: ``read_table_version`` time-travels into
-    them and ``rollback_table`` re-points the table at one atomically,
-    exactly Delta's ``VERSION AS OF`` + ``RESTORE`` on plain parquet.
-    """
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    def _swap_pointer(version_dir: str) -> None:
-        # atomic pointer swap: build the symlink under a temp name in
-        # the same directory, then rename over final_path in one call
-        tmp_link = final_path + ".lnk-" + uuid.uuid4().hex[:6]
-        os.symlink(os.path.basename(version_dir), tmp_link)
-        os.replace(tmp_link, final_path)
-
-    # --- recovery: a crash inside the one-time plain-dir migration (or
-    # a manually deleted pointer) leaves version dirs with no symlink.
-    # Restore the pointer to the newest intact version so the publish
-    # below always starts from "final_path resolves".
-    if not os.path.lexists(final_path):
-        orphans = [d for d in glob.glob(final_path + ".v-*") if os.path.isdir(d)]
-        if orphans:
-            _swap_pointer(max(orphans, key=os.path.getmtime))
-    # --- one-time migration of a legacy plain directory to the
-    # versioned layout, done BEFORE the write/audit phases so the only
-    # non-atomic instant (demote → re-link, two renames) is as narrow
-    # as possible and is crash-recoverable via the restore above.
-    if os.path.isdir(final_path) and not os.path.islink(final_path):
-        demoted = final_path + ".v-" + uuid.uuid4().hex[:12]
-        os.rename(final_path, demoted)
-        _swap_pointer(demoted)
-
-    staging = final_path + staging_suffix
-    df.write.mode("overwrite").parquet(staging)
-    staged = df.sparkSession.read.parquet(staging)
-    results = [audit(staged) for audit in audits]
-    if all(ok for _, ok in results):
-        version = final_path + ".v-" + uuid.uuid4().hex[:12]
-        os.rename(staging, version)
-        _swap_pointer(version)
-        # retention: keep the newest ``keep_versions`` SUPERSEDED
-        # version dirs for time travel / rollback (Delta/Iceberg
-        # snapshot retention on a filesystem); 0 = live version only.
-        live = os.path.realpath(final_path)
-        old = sorted(
-            (
-                d
-                for d in glob.glob(final_path + ".v-*")
-                if os.path.isdir(d) and os.path.realpath(d) != live
-            ),
-            key=os.path.getmtime,
-            reverse=True,
-        )
-        for stale in old[keep_versions:]:
-            shutil.rmtree(stale, ignore_errors=True)
-    return results
-
-
-def list_table_versions(final_path: str) -> list[str]:
-    """Version directories of a WAP-published table, LIVE FIRST then
-    retained superseded versions newest-first — the filesystem analogue
-    of Delta's ``DESCRIBE HISTORY`` (ordering by directory mtime: each
-    publish creates a strictly newer dir)."""
-    import glob
-    import os
-
-    live = os.path.realpath(final_path)
-    others = sorted(
-        (
-            d
-            for d in glob.glob(final_path + ".v-*")
-            if os.path.isdir(d) and os.path.realpath(d) != live
-        ),
-        key=os.path.getmtime,
-        reverse=True,
-    )
-    return [live] + others
-
-
-def read_table_version(spark, final_path: str, n_back: int = 0) -> DataFrame:
-    """Time travel over a WAP table published with ``keep_versions``:
-    ``n_back=0`` reads the live version (identical to reading
-    ``final_path``), ``n_back=1`` the previous one, etc. Raises
-    IndexError past the retention window — the same contract as
-    querying a vacuumed Delta snapshot."""
-    versions = list_table_versions(final_path)
-    if n_back >= len(versions):
-        raise IndexError(
-            f"version {n_back} not retained (have {len(versions)}; "
-            "publish with a larger keep_versions)"
-        )
-    return spark.read.parquet(versions[n_back])
-
-
-def rollback_table(final_path: str, n_back: int = 1) -> str:
-    """Roll the table pointer back to a retained previous version with
-    the same atomic symlink swap the publish path uses — readers see
-    either the bad version or the restored one, never a missing table.
-    The rolled-back-FROM version dir is retained (it becomes the newest
-    superseded version), so a rollback is itself reversible. Returns
-    the version dir now live."""
-    import os
-    import uuid
-
-    versions = list_table_versions(final_path)
-    if n_back >= len(versions):
-        raise IndexError(f"version {n_back} not retained (have {len(versions)})")
-    target = versions[n_back]
-    tmp_link = final_path + ".lnk-" + uuid.uuid4().hex[:6]
-    os.symlink(os.path.basename(target), tmp_link)
-    os.replace(tmp_link, final_path)
-    return target

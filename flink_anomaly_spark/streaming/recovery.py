@@ -106,11 +106,12 @@ def count_foreach_side_effects(
             with open(fname, "w") as f:
                 f.write(str(row))
 
-    q = (
-        result.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_fe_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="ckpt_fe_") as ckpt:
+        q = (
+            result.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return len(os.listdir(effect_dir))

@@ -17,7 +17,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", cpus=8)
+    spark = get_spark("tests")
     yield spark
 
 

@@ -644,40 +644,6 @@ def test_kmv_null_keys_excluded(spark):
     assert ro.exact_union == 500 and ro.exact_intersection == 100
 
 
-def test_manifest_concurrent_commit_rejected(spark, tmp_path):
-    """Optimistic concurrency (ADVICE r5): a second writer whose commit
-    was built against a stale parent must FAIL with
-    ConcurrentCommitError instead of silently discarding the first
-    writer's files; after the conflict the table still serves the
-    winner's rows and a rebased retry succeeds."""
-    import pytest
-
-    from flink_anomaly_spark.manifest_table import (
-        ConcurrentCommitError,
-        ManifestTable,
-    )
-
-    t = ManifestTable.create(str(tmp_path / "tbl"))
-    t.append(spark.range(0, 10).selectExpr("id AS v"))
-    # writer B snapshots the current parent, then writer A commits
-    stale_parent = t._latest_name()
-    cur = t._load(stale_parent)
-    t.append(spark.range(10, 20).selectExpr("id AS v"))
-    files, ddl = t._write_files(spark.range(20, 30).selectExpr("id AS v"))
-    with pytest.raises(ConcurrentCommitError):
-        t._commit(
-            files=cur["files"] + files,
-            parent=stale_parent,
-            schema_ddl=cur["schema_ddl"] or ddl,
-            batch_ids=cur["batch_ids"],
-            stats={},
-        )
-    # winner's rows intact; a rebased retry (fresh latest()) succeeds
-    assert t.read(spark).count() == 20
-    t.append(spark.range(30, 40).selectExpr("id AS v"))
-    assert t.read(spark).count() == 30
-
-
 def test_bitmap_aggs_merge_across_stored_partials(spark, tmp_path):
     """The bitmap family's mergeability is the point: per-day bitmaps
     stored to parquet, then OR-merged WITHOUT rescanning the raw rows,

@@ -59,6 +59,24 @@ def test_salted_join_matches_plain(spark):
     assert plain == salted
 
 
+@pytest.mark.parametrize(
+    "salt",
+    [
+        lambda ev, users: salted_group_agg(ev, "event_type", {"n": "count(*)"}),
+        lambda ev, users: salted_join_hot_keys(ev, users, "user_id", hot_keys=[1, 2]),
+    ],
+    ids=["group_agg", "join_hot_keys"],
+)
+def test_salted_plans_are_deterministic(spark, salt):
+    """A salt drawn from the row's content, not a random generator,
+    keeps the optimized plan deterministic: a retried task recomputes
+    the same salt, so Spark need not re-run the whole stage."""
+    events = load_table(spark, SF_SMOKE, "events")
+    users = events.select("user_id").distinct()
+    df = salt(events, users)
+    assert df._jdf.queryExecution().optimizedPlan().deterministic()
+
+
 def test_bucketed_join_no_shuffle(spark, tmp_path):
     """Joining two tables bucketed on the same key must not add a
     shuffle on the bucketed side (the Exchange disappears)."""

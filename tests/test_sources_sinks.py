@@ -89,130 +89,6 @@ def test_binary_file_source_feeds_media_dedup(spark, tmp_path):
     assert sorted(g.n for g in groups) == [1, 2]
 
 
-def test_write_audit_publish_promotes_only_on_pass(spark, tmp_path):
-    """WAP: a passing audit atomically promotes the staging dir; a
-    failing audit leaves the published table untouched (old version
-    still readable) and keeps staging for inspection."""
-    from flink_anomaly_spark.sinks import write_audit_publish
-
-    final = str(tmp_path / "docs")
-    v1 = spark.range(0, 100).select(F.col("id"), F.lit("v1").alias("tag"))
-
-    def audit_nonempty(df):
-        return ("nonempty", df.count() > 0)
-
-    def audit_unique(df):
-        return ("id_unique", df.select("id").distinct().count() == df.count())
-
-    res = write_audit_publish(v1, final, [audit_nonempty, audit_unique])
-    assert res == [("nonempty", True), ("id_unique", True)]
-    assert not os.path.exists(final + "._staging")
-    assert spark.read.parquet(final).count() == 100
-
-    # v2 violates uniqueness -> must NOT replace v1
-    v2 = v1.unionAll(v1).select("id", F.lit("v2").alias("tag"))
-    res = write_audit_publish(v2, final, [audit_nonempty, audit_unique])
-    assert ("id_unique", False) in res
-    pub = spark.read.parquet(final)
-    assert pub.count() == 100
-    assert pub.select("tag").distinct().collect()[0][0] == "v1"
-    # staging left for inspection
-    assert os.path.exists(final + "._staging")
-
-
-def test_write_audit_publish_pointer_swap_never_drops_table(spark, tmp_path):
-    """The publish step must be a pointer swap, not rmtree+rename: at no
-    point may final_path stop resolving, a superseded version dir is
-    cleaned up after the swap, and a third passing publish over the
-    symlink works the same as the second (round-4 ADVICE fix)."""
-    import glob
-
-    from flink_anomaly_spark.sinks import write_audit_publish
-
-    final = str(tmp_path / "docs")
-    ok = [lambda df: ("nonempty", df.count() > 0)]
-
-    for tag, n in (("v1", 10), ("v2", 20), ("v3", 30)):
-        frame = spark.range(0, n).select(F.col("id"), F.lit(tag).alias("tag"))
-        res = write_audit_publish(frame, final, ok)
-        assert res == [("nonempty", True)]
-        pub = spark.read.parquet(final)
-        assert pub.count() == n
-        assert pub.select("tag").distinct().collect()[0][0] == tag
-        # published path is now a pointer into a complete version dir
-        assert os.path.islink(final)
-        assert os.path.isdir(os.path.realpath(final))
-    # only the live version dir remains — superseded versions cleaned
-    assert len(glob.glob(final + ".v-*")) == 1
-    # a failing audit over the symlinked table leaves it untouched
-    bad = spark.range(0, 5).select(F.col("id"), F.lit("v4").alias("tag"))
-    res = write_audit_publish(bad, final, [lambda df: ("big_enough", df.count() >= 10)])
-    assert res == [("big_enough", False)]
-    assert spark.read.parquet(final).select("tag").distinct().collect()[0][0] == "v3"
-
-
-def test_write_audit_publish_migration_and_crash_recovery(spark, tmp_path):
-    """Round-5 ADVICE (medium): first publish over a LEGACY PLAIN
-    DIRECTORY pre-migrates it to the versioned layout before any
-    write/audit work, and a crash inside that migration (final_path
-    missing, orphan .v- dir present) is recovered on the next call by
-    restoring the pointer to the newest version."""
-    import glob
-    import shutil
-
-    from flink_anomaly_spark.sinks import write_audit_publish
-
-    final = str(tmp_path / "docs")
-    ok = [lambda df: ("nonempty", df.count() > 0)]
-
-    # 1) legacy layout: a plain parquet directory, no symlink
-    spark.range(0, 10).select(F.col("id"), F.lit("legacy").alias("tag")).write.parquet(final)
-    assert os.path.isdir(final) and not os.path.islink(final)
-    res = write_audit_publish(
-        spark.range(0, 20).select(F.col("id"), F.lit("v2").alias("tag")), final, ok
-    )
-    assert res == [("nonempty", True)]
-    assert os.path.islink(final)  # migrated to pointer layout
-    assert spark.read.parquet(final).select("tag").distinct().collect()[0][0] == "v2"
-
-    # 2) migration even happens when the AUDIT FAILS (no promote): the
-    # table is still readable through the new pointer afterwards
-    final2 = str(tmp_path / "docs2")
-    spark.range(0, 10).select(F.col("id"), F.lit("legacy").alias("tag")).write.parquet(final2)
-    res = write_audit_publish(
-        spark.range(0, 3).select(F.col("id"), F.lit("bad").alias("tag")),
-        final2,
-        [lambda df: ("big_enough", df.count() >= 10)],
-    )
-    assert res == [("big_enough", False)]
-    assert os.path.islink(final2)
-    assert spark.read.parquet(final2).select("tag").distinct().collect()[0][0] == "legacy"
-
-    # 3) simulate a crash between demote and re-link: pointer gone,
-    # version dir orphaned — next publish must first restore the
-    # pointer (recovery), then publish normally
-    os.remove(final)
-    assert not os.path.lexists(final)
-    versions_before = set(glob.glob(final + ".v-*"))
-    assert versions_before  # the orphan exists
-    res = write_audit_publish(
-        spark.range(0, 30).select(F.col("id"), F.lit("v3").alias("tag")), final, ok
-    )
-    assert res == [("nonempty", True)]
-    assert spark.read.parquet(final).select("tag").distinct().collect()[0][0] == "v3"
-    # recovery alone (crash again, then a FAILING publish): table must
-    # resolve to the restored previous version, never be missing
-    os.remove(final)
-    write_audit_publish(
-        spark.range(0, 1).select(F.col("id"), F.lit("bad").alias("tag")),
-        final,
-        [lambda df: ("big_enough", df.count() >= 10)],
-    )
-    assert os.path.islink(final)
-    assert spark.read.parquet(final).select("tag").distinct().collect()[0][0] == "v3"
-    shutil.rmtree(str(tmp_path), ignore_errors=True)
-
-
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     """Schema evolution across table versions (a column added later):
     reading the whole directory with mergeSchema must union the
@@ -299,57 +175,6 @@ def test_write_parquet_codec_and_file_size_bounds(spark, tmp_path):
     assert len(parts) == 5  # 500 docs / 100 per file, single task
     assert all(".zstd.parquet" in f for f in parts), parts
     assert spark.read.parquet(out).count() == docs.count()
-
-
-def test_wap_time_travel_and_rollback(spark, tmp_path):
-    """Snapshot retention + time travel + rollback on the WAP table
-    (round 5): keep_versions retains superseded version dirs,
-    read_table_version reads them (Delta VERSION AS OF), rollback_table
-    atomically re-points the live table (Delta RESTORE) and is itself
-    reversible; retention evicts beyond the window."""
-    from flink_anomaly_spark.sinks import (
-        list_table_versions,
-        read_table_version,
-        rollback_table,
-        write_audit_publish,
-    )
-
-    final = str(tmp_path / "docs")
-    ok = [lambda df: ("nonempty", df.count() > 0)]
-    for tag, n in (("v1", 10), ("v2", 20), ("v3", 30)):
-        frame = spark.range(0, n).select(F.col("id"), F.lit(tag).alias("tag"))
-        assert write_audit_publish(frame, final, ok, keep_versions=2) == [
-            ("nonempty", True)
-        ]
-    # live + 2 retained
-    assert len(list_table_versions(final)) == 3
-    assert read_table_version(spark, final, 0).count() == 30
-    assert read_table_version(spark, final, 1).count() == 20
-    assert read_table_version(spark, final, 2).count() == 10
-    import pytest as _pytest
-
-    with _pytest.raises(IndexError):
-        read_table_version(spark, final, 3)
-
-    # v3 turns out bad -> restore v2; readers never lose the table
-    rollback_table(final, 1)
-    assert spark.read.parquet(final).select("tag").distinct().collect()[0][0] == "v2"
-    # the rollback is reversible: v3 is now the newest superseded dir
-    assert read_table_version(spark, final, 1).select("tag").distinct().collect()[0][0] == "v3"
-    rollback_table(final, 1)
-    assert spark.read.parquet(final).select("tag").distinct().collect()[0][0] == "v3"
-
-    # retention window: a 4th publish with keep_versions=1 evicts older
-    frame = spark.range(0, 40).select(F.col("id"), F.lit("v4").alias("tag"))
-    write_audit_publish(frame, final, ok, keep_versions=1)
-    vs = list_table_versions(final)
-    assert len(vs) == 2
-    assert spark.read.parquet(final).count() == 40
-    assert read_table_version(spark, final, 1).count() == 30  # v3 kept
-    # default keep_versions=0 reverts to live-only (the old behavior)
-    frame = spark.range(0, 50).select(F.col("id"), F.lit("v5").alias("tag"))
-    write_audit_publish(frame, final, ok)
-    assert len(list_table_versions(final)) == 1
 
 
 def _load_in_own_group(spark, sf_dir, name):

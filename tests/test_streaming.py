@@ -5,6 +5,7 @@ transposed — SURVEY §5)."""
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -410,9 +411,15 @@ def test_foreach_sink_at_least_once_parity(spark, tmp_path):
     os.makedirs(effect_dir)
     ev = stream_events(spark, SF_SMOKE).filter(F.col("value") > 450)
     expected = load_table(spark, SF_SMOKE, "events").filter(F.col("value") > 450).count()
+
+    def checkpoints():
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("ckpt_fe_")}
+
+    before = checkpoints()
     got = count_foreach_side_effects(ev, effect_dir)
     assert got >= expected
     assert got == expected  # no failure injected in this run
+    assert checkpoints() == before  # the query's checkpoint is removed
 
 
 def test_streaming_running_zscore_state_and_warmup(spark):
@@ -487,37 +494,6 @@ def test_stateful_recovery_running_zscore(spark, tmp_path):
     recovered = recovered.sort_values(key).reset_index(drop=True)[clean.columns]
     clean = clean.sort_values(key).reset_index(drop=True)
     assert recovered.equals(clean)
-
-
-def test_idempotent_foreach_batch_skips_replayed_batch(spark, tmp_path):
-    """The batchId-ledger sink must apply effects exactly once even when
-    a batch is replayed: re-running the same stream from a FRESH
-    checkpoint but the SAME ledger simulates the replay of batch 0 —
-    the effect list must not grow."""
-    import json
-
-    from flink_anomaly_spark.sinks import sink_foreach_batch_idempotent
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame([(i,) for i in range(5)], "v long").coalesce(1).write.parquet(src)
-    effects_file = str(tmp_path / "effects.jsonl")
-
-    def effect(batch_df, batch_id):
-        rows = sorted(r.v for r in batch_df.collect())
-        with open(effects_file, "a") as f:
-            f.write(json.dumps({"batch": batch_id, "rows": rows}) + "\n")
-
-    ledger = str(tmp_path / "ledger")
-    stream = spark.readStream.schema("v long").parquet(src)
-    q = sink_foreach_batch_idempotent(stream, effect, str(tmp_path / "cp1"), ledger)
-    q.awaitTermination()
-    first = open(effects_file).read().splitlines()
-    assert len(first) == 1 and json.loads(first[0])["rows"] == [0, 1, 2, 3, 4]
-
-    # replay: fresh checkpoint reprocesses batch 0, same ledger dedups it
-    q2 = sink_foreach_batch_idempotent(stream, effect, str(tmp_path / "cp2"), ledger)
-    q2.awaitTermination()
-    assert open(effects_file).read().splitlines() == first
 
 
 def test_synthetic_stream_source_offset_contract():

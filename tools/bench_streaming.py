@@ -21,7 +21,8 @@ explicit act, the round-11 bench.py convention):
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default all cores),
-     SPARK_GRAFT_BENCH_STREAMING_DETAIL (detail path override).
+     SPARK_GRAFT_BENCH_STREAMING_DETAIL (detail path override),
+     SPARK_GRAFT_DRIVER_MEM (default 16g, as in bench.py).
 
 Unlike bench.py there is no warm-up run discard: a streaming query's
 dominant cost IS the fixed micro-batch machinery (query planning,
@@ -45,6 +46,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
+    # the committed baseline's heap, not the session's host-sized default
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("bench-streaming")
     queries = {
         n: fn for n, fn in all_queries().items() if n.startswith("streaming_")
